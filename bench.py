@@ -740,7 +740,7 @@ def main() -> None:
     # per-core Python workers (~1-2s once), which would otherwise land
     # inside whichever timed query runs an Arrow kernel first.
     spark.range(1000).selectExpr("sum(id)").collect()
-    ncpu = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    ncpu = spark.sparkContext.defaultParallelism
     spark.range(ncpu * 4, numPartitions=ncpu).mapInArrow(
         lambda it: it, "id long"
     ).count()

@@ -163,14 +163,11 @@ def register_sql_functions(spark) -> None:
 # scan), so executor memory sizing is unchanged.
 import os as _os
 
-WS_PERSIST = _os.environ.get("SPARK_GRAFT_WS_PERSIST", "1") != "0"
 _TASK_WS: dict = {}
 _TASK_WS_PID: "int | None" = None
 
 
 def task_workspace() -> dict:
-    if not WS_PERSIST:  # A/B escape hatch: per-call dict == the r13 behavior
-        return {}
     global _TASK_WS, _TASK_WS_PID
     pid = _os.getpid()
     if _TASK_WS_PID != pid:

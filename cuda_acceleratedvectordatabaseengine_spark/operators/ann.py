@@ -48,12 +48,6 @@ PAIRS_SCHEMA = T.StructType(
     ]
 )
 
-# exact_verify_pairs batch materialization: "arrow" (r15 default) =
-# mapInArrow + arrowkit.list_matrix zero-copy reshape; "pandas" = the r14
-# mapInPandas shape (per-row Python np.asarray), kept for A/B
-# (scripts/ab_verify_pairs.py asserts bit-identical rows).
-VERIFY_PAIRS_IMPL = "arrow"
-
 
 def _pack_blocks(df: DataFrame, id_col: str, vec_col: str, n_blocks: int) -> DataFrame:
     """One row per block: {block, ids: array<long>, vecs: array<array<float>>}.
@@ -275,9 +269,9 @@ def lsh_near_dup_pairs(
     # scored once, not n_tables times (candidate generation is the cheap
     # part; the distance evaluation is what must not be repeated).
     # impl="self_join": `keyed` is persisted above, so both self-join
-    # sides are cache reads and the r14 shape measures faster than the
-    # group-explode here (scripts/ab_bucket_pairs.py + the counterbalanced
-    # dedup_lsh_recall rerun: 4.83 vs 5.14s min-of-reps).
+    # sides are cache reads and the self-join shape measures faster than
+    # the group-explode here (OPTIMIZATION_r15.md §3: counterbalanced
+    # dedup_lsh_recall rerun, 4.83 vs 5.14s min-of-reps).
     cand = bucket_candidate_pairs(
         keyed, ["table_id", "bucket"], "vec_id", "vec_id_a", "vec_id_b",
         max_bucket_size, impl="self_join",
@@ -308,39 +302,12 @@ def exact_verify_pairs(
         "vec_id_b",
     )
 
-    if VERIFY_PAIRS_IMPL == "pandas":
-        # r14 shape, kept for A/B (scripts/ab_verify_pairs.py): pandas
-        # hands each vector over as a Python object, so rebuilding the
-        # (n, d) matrices costs a Python-level pass per batch
-        def verify_pd(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                A = np.array(
-                    [np.asarray(v) for v in pdf["va"]], dtype=np.float64
-                )
-                B = np.array(
-                    [np.asarray(v) for v in pdf["vb"]], dtype=np.float64
-                )
-                d = D.rowwise(metric, A, B)
-                keep = d < tau
-                yield pd.DataFrame(
-                    {
-                        "vec_id_a": pdf["vec_id_a"].to_numpy(np.int64)[keep],
-                        "vec_id_b": pdf["vec_id_b"].to_numpy(np.int64)[keep],
-                        "d2": d[keep],
-                    }
-                )
-
-        return pairs.mapInPandas(verify_pd, schema=PAIRS_SCHEMA)
-
-    # r15: mapInArrow + flat-buffer reshape (arrowkit.list_matrix) — the
-    # same zero-copy discipline as every dense scanner; the candidate
-    # volume here is B^2/2 per bucket (1.28M pairs for 141 survivors on
-    # the bench's weak-similarity LSH shape), so the per-row Python
-    # materialization of the pandas path dominated the actual row-wise
-    # distance math. Same D.rowwise float64 kernel on the same values —
-    # bit-identical output (asserted in scripts/ab_verify_pairs.py).
+    # mapInArrow + flat-buffer reshape (arrowkit.list_matrix) — the same
+    # zero-copy discipline as every dense scanner; the candidate volume
+    # here is B^2/2 per bucket (1.28M pairs for 141 survivors on the
+    # bench's weak-similarity LSH shape), so per-row Python vector
+    # materialization would dominate the actual row-wise distance math
+    # (OPTIMIZATION_r15.md §6: 1.21x over mapInPandas, bit-identical).
     def verify(batches):
         from ..functions import arrowkit as AK
 

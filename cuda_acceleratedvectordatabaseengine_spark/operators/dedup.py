@@ -50,15 +50,6 @@ def _col(c):
 DEFAULT_NUM_PERM = 128
 DEFAULT_BANDS = 32  # 32 bands x 4 rows: P(miss | j=0.9) ~ 1e-15
 
-# Exact-Jaccard verification shape for minhash_dedup_pairs(verify=True):
-# "array_intersect" (r15 default) persists the per-doc shingle-ARRAY
-# relation (which the signature kernel consumes anyway) and verifies each
-# candidate pair with size(array_intersect(ha, hb)) — 2 joins, no per-pair
-# groupBy, no size joins, ONE persist barrier. "shingle_join" keeps the
-# r14 flat-table shape for A/B (scripts/ab_minhash_verify.py asserts
-# identical output).
-MINHASH_VERIFY_IMPL = "array_intersect"
-
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -303,7 +294,6 @@ def minhash_signatures(
     id_col: str = "doc_id",
     max_shingle_doc_freq: int | None = None,
     seed: int = 42,
-    shingles: DataFrame | None = None,
     shingles_grouped: DataFrame | None = None,
 ) -> DataFrame:
     """{doc_id, sig: array<bigint>[num_perm]}. Permutation j is
@@ -312,11 +302,11 @@ def minhash_signatures(
     batch with a segmented min (np.minimum.reduceat). Replaces num_perm
     JVM hash evaluations per shingle row (~64M calls at 500K shingles x
     128 perms) with a handful of (num_perm x n_hashes) matrix ops.
-    Docs with zero shingles are omitted. ``shingles`` lets a caller that
-    also needs the shingle table (exact verify) share one cached pass;
-    ``shingles_grouped`` skips the internal groupBy entirely when the
-    caller already holds the {doc_id, hs: array<bigint>} relation (the
-    r15 array-verify path persists exactly that)."""
+    Docs with zero shingles are omitted. ``shingles_grouped`` skips the
+    internal shingle pass and groupBy entirely when the caller already
+    holds the {doc_id, hs: array<bigint>} relation (the exact-verify path
+    of ``minhash_dedup_pairs`` persists exactly that); ``n``, ``text_col``
+    and ``max_shingle_doc_freq`` are then ignored."""
     import pyarrow as pa
 
     rng = np.random.default_rng(seed)
@@ -327,12 +317,11 @@ def minhash_signatures(
     if shingles_grouped is not None:
         grouped = shingles_grouped
     else:
-        sh = (
-            shingles
-            if shingles is not None
-            else _shingle_table(df, text_col, id_col, n, max_shingle_doc_freq)
+        grouped = (
+            _shingle_table(df, text_col, id_col, n, max_shingle_doc_freq)
+            .groupBy("doc_id")
+            .agg(F.collect_list("shingle").alias("hs"))
         )
-        grouped = sh.groupBy("doc_id").agg(F.collect_list("shingle").alias("hs"))
 
     def sigs(batches):
         np_err = np.seterr(over="ignore")  # uint64 wraparound is the design
@@ -460,53 +449,18 @@ def minhash_dedup_pairs(
             .select("doc_id_a", "doc_id_b", est.alias("jaccard"))
             .filter(F.col("jaccard") >= threshold)
         )
-    if MINHASH_VERIFY_IMPL == "shingle_join":
-        # r14 shape, kept for A/B (scripts/ab_minhash_verify.py): flat
-        # shingle table persisted, exact Jaccard via two joins back to it
-        # + a per-pair groupBy + two size joins.
-        sh = shared_cache.persist(
-            _shingle_table(df, text_col, id_col, n, max_shingle_doc_freq)
-        )
-        sigs = shared_cache.persist(
-            minhash_signatures(
-                df, num_perm, n, text_col, id_col, max_shingle_doc_freq,
-                shingles=sh,
-            )
-        )
-        cand = lsh_candidate_pairs(sigs, bands, num_perm, max_bucket_size)
-        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-        sha = sh.select(F.col("doc_id").alias("doc_id_a"), "shingle")
-        shb = sh.select(F.col("doc_id").alias("doc_id_b"), "shingle")
-        inter = (
-            cand.join(sha, "doc_id_a")
-            .join(shb, ["doc_id_b", "shingle"])
-            .groupBy("doc_id_a", "doc_id_b")
-            .agg(F.count("*").alias("c"))
-        )
-        sa = sizes.select(
-            F.col("doc_id").alias("doc_id_a"), F.col("n_sh").alias("na")
-        )
-        sb = sizes.select(
-            F.col("doc_id").alias("doc_id_b"), F.col("n_sh").alias("nb")
-        )
-        jac = F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
-        return (
-            inter.join(sa, "doc_id_a")
-            .join(sb, "doc_id_b")
-            .select("doc_id_a", "doc_id_b", jac.alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold)
-        )
-    # r15 array-verify shape: signatures already group the shingle table
-    # into per-doc arrays internally — persist THAT relation (one barrier
-    # instead of two), feed the signature kernel from it, and verify each
-    # candidate with size(array_intersect(ha, hb)) instead of two joins
-    # back to the flat table + a per-pair groupBy + two size joins.
+    # Array-verify shape: signatures already group the shingle table into
+    # per-doc arrays internally — persist THAT relation (one barrier), feed
+    # the signature kernel from it, and verify each candidate with
+    # size(array_intersect(ha, hb)) instead of two joins back to the flat
+    # table + a per-pair groupBy + two size joins (OPTIMIZATION_r15.md §4).
     # Per-doc arrays are distinct by construction (word_shingles_expr is
     # array_distinct before xxhash64), so the set intersection equals the
-    # flat-table row-count intersection — identity asserted over full
-    # result rows in scripts/ab_minhash_verify.py. The signature set is
-    # reread by sibling operators (cluster resolution reruns this exact
-    # pipeline) — both persists go through the bounded shared registry.
+    # flat-table row-count intersection that ngram_jaccard_pairs computes
+    # (test_minhash_verify_impls_identical compares the two). The signature
+    # set is reread by sibling operators (cluster resolution reruns this
+    # exact pipeline) — both persists go through the bounded shared
+    # registry.
     grouped = shared_cache.persist(
         _shingle_table(df, text_col, id_col, n, max_shingle_doc_freq)
         .groupBy("doc_id")

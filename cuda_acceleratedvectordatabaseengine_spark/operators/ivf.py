@@ -431,11 +431,6 @@ def select_nprobe_lists(C: np.ndarray, Q: np.ndarray, nprobe: int, metric: str) 
 # is exposed but has no measured win at any realistic shape.
 FUSE_INFLATION_CAP = 1.0
 
-# Reuse-workspace pairwise in the scan kernels (PERF.md r9: fresh score
-# blocks are fault-bound on slow-page hosts). Captured at scanner-factory
-# time on the driver, so A/B probes can flip it per search in one process.
-PAIRWISE_WS = True
-
 # Quantized-first-pass cascade (r8): SQ8-shortlist scan + pruned exact
 # rerank — only ``rerank_k`` candidate rows per query re-enter Python
 # with raw floats (JVM-side broadcast semi-join, knn.exact_rerank), so
@@ -512,7 +507,6 @@ def _list_scanner(
     # pickled closure carries the value and probes/tests can patch it
     if fuse_cap is None:
         fuse_cap = FUSE_INFLATION_CAP
-    use_ws = PAIRWISE_WS  # resolved driver-side, pickled with the closure
 
     # invert: list_id -> query row indices
     by_list: dict[int, list[int]] = {}
@@ -522,7 +516,7 @@ def _list_scanner(
     by_list_np = {lid: np.asarray(qs, dtype=np.int64) for lid, qs in by_list.items()}
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ws = D.task_workspace() if use_ws else None  # process-pooled (r14)
+        ws = D.task_workspace()  # process-pooled score blocks (PERF.md r9)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -626,10 +620,9 @@ def _range_list_scanner(
 
     if fuse_cap is None:
         fuse_cap = FUSE_INFLATION_CAP
-    use_ws = PAIRWISE_WS  # resolved driver-side, pickled with the closure
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ws = D.task_workspace() if use_ws else None  # process-pooled (r14)
+        ws = D.task_workspace()  # process-pooled score blocks (PERF.md r9)
         for rb in batches:
             if rb.num_rows == 0:
                 continue

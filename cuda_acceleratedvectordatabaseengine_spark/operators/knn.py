@@ -50,34 +50,11 @@ MAX_TOPK = 1000  # server/query_service.cpp:77
 # enforce the contract instead of leaving it docstring-only.
 MAX_QUERY_BATCH = 1_000_000
 CANDIDATE_SCHEMA = "query_id long, id long, distance double"
-# reuse pairwise score workspaces across Arrow batches in the brute-force
-# scanners (bit-identical values; the r10 interleaved A/B artifact is
-# scripts/ab_knn_ws.py). Resolved at scanner-FACTORY time so flipping the
-# module global reaches executors (closure capture, PERF.md r9).
-PAIRWISE_WS = True
 
 
 def validate_topk(k: int) -> None:
     if not 1 <= k <= MAX_TOPK:
         raise ValueError(f"topk must be in [1, {MAX_TOPK}], got {k}")
-
-
-# One-exchange T4 merge (r14): hash-partitioning on query_id alone satisfies
-# the clustering requirement of BOTH merge steps (dedup groups by
-# (query_id, id) — a superset of the partitioning key — and the rank window
-# groups by query_id), so an explicit repartition(query_id) lets the
-# min-aggregate dedup AND the top-k window share ONE shuffle. The r13 shape
-# was two back-to-back window stages: Exchange(query_id, id) + sort-based
-# row_number dedup, then Exchange(query_id) + the rank window — 2 exchanges
-# and 4 sorts per search merge. min(distance) per (query_id, id) is exactly
-# the row kept by the old row_number()=1-by-distance-asc dedup (distances
-# are finite by construction — masked +inf candidates are filtered in the
-# scanners), so results are identical. NULL divergence (r14 ADVICE): if a
-# scanner ever emitted a NULL distance, min() would ignore it while the old
-# nulls-first asc window kept it — today's scanners guarantee finite
-# non-null values, so the shapes agree; any new scanner must keep that
-# contract. False = the r13 two-window shape, kept for A/B.
-TOPK_SINGLE_EXCHANGE = True
 
 
 def topk_per_query(
@@ -95,21 +72,19 @@ def topk_per_query(
     results are deterministic across engines and runs.
     """
     if dedup:
-        if TOPK_SINGLE_EXCHANGE:
-            candidates = (
-                candidates.repartition(query_id_col)
-                .groupBy(query_id_col, id_col)
-                .agg(F.min(distance_col).alias(distance_col))
-            )
-        else:
-            dd = Window.partitionBy(query_id_col, id_col).orderBy(
-                F.col(distance_col).asc()
-            )
-            candidates = (
-                candidates.withColumn("__dd", F.row_number().over(dd))
-                .filter(F.col("__dd") == 1)
-                .drop("__dd")
-            )
+        # ONE exchange: hash-partitioning on query_id alone satisfies the
+        # clustering requirement of BOTH steps (the dedup groups by
+        # (query_id, id), a superset of the key; the rank window by
+        # query_id), so the min-aggregate dedup and the top-k window share
+        # one shuffle instead of two window stages (OPTIMIZATION_r14.md
+        # §3). min() ignores NULL distances; every scanner emits finite
+        # non-null values (masked +inf candidates are filtered), and any
+        # new scanner must keep that contract.
+        candidates = (
+            candidates.repartition(query_id_col)
+            .groupBy(query_id_col, id_col)
+            .agg(F.min(distance_col).alias(distance_col))
+        )
     w = Window.partitionBy(query_id_col).orderBy(
         F.col(distance_col).asc(), F.col(id_col).asc()
     )
@@ -250,10 +225,8 @@ def partial_topk_scanner(
 
     from ..functions import arrowkit as AK
 
-    use_ws = PAIRWISE_WS  # resolved driver-side, pickled with the closure
-
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ws = D.task_workspace() if use_ws else None  # process-pooled (r14)
+        ws = D.task_workspace()  # process-pooled score blocks (PERF.md r9)
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -285,10 +258,8 @@ def range_scanner(
 
     from ..functions import arrowkit as AK
 
-    use_ws = PAIRWISE_WS  # resolved driver-side, pickled with the closure
-
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ws = D.task_workspace() if use_ws else None  # process-pooled (r14)
+        ws = D.task_workspace()  # process-pooled score blocks (PERF.md r9)
         for rb in batches:
             if rb.num_rows == 0:
                 continue

@@ -436,15 +436,6 @@ def hashed_term_vectors(
     )
 
 
-# dense_hashed_vectors physical shape: "fused" (r14 default) = one
-# repartition(id) reused by the tf and entry aggregations, norm + densify
-# as higher-order expressions over collected (dim, tf) entries; "case" =
-# the r13 COO + SUM(CASE dim=i)-per-dimension pivot (O(nnz*dim) CASE
-# evaluations, 3 exchanges). Values are bit-identical (see the inline
-# proof below); switch kept for A/B (scripts/ab_dense_vectors.py).
-DENSE_VECTOR_IMPL = "fused"
-
-
 def dense_hashed_vectors(
     df: DataFrame,
     dim: int = 64,
@@ -457,43 +448,22 @@ def dense_hashed_vectors(
     no-model bridge from raw text to the ANN engine, and the default
     stand-in where ``embed_documents`` would run a real encoder.
 
-    Shape (``DENSE_VECTOR_IMPL="fused"``): explode -> ONE shuffle keyed on
-    the id -> tf + entry aggregations reusing that partitioning -> norm and
-    the dense array built as higher-order expressions per id; missing dims
-    land 0.0. No Python, no collect, no self-join. Keep ``dim`` modest
-    (64-256): this is a tf fingerprint, not a semantic embedding."""
+    Shape: explode -> ONE shuffle keyed on the id -> tf + entry
+    aggregations reusing that partitioning -> norm and the dense array
+    built as higher-order expressions per id; missing dims land 0.0. No
+    Python, no collect, no self-join. Keep ``dim`` modest (64-256): this
+    is a tf fingerprint, not a semantic embedding."""
     if dim <= 0:
-        # both impls must validate identically: the case path inherits this
-        # check from hashed_term_vectors; without it the fused path emits
-        # `% 0` nulls and a bogus sequence(0, -1) instead of raising
+        # hashed_term_vectors raises here too; without the check the
+        # densify below emits `% 0` nulls and a bogus sequence(0, -1)
         raise ValueError(f"dim must be positive, got {dim}")
-    if DENSE_VECTOR_IMPL == "case":
-        # r13 shape: COO -> one SUM(CASE dim=i) pivot per dimension. Costs
-        # O(nnz * dim) CASE evaluations and rides hashed_term_vectors'
-        # tf/norm/join lineage (3 exchanges end to end). Kept for A/B.
-        coo = hashed_term_vectors(df, dim=dim, text_col=text_col, id_col=id_col)
-        aggs = [
-            F.coalesce(
-                F.sum(F.when(F.col("dim") == i, F.col("w"))), F.lit(0.0)
-            ).alias(f"_c{i}")
-            for i in range(dim)
-        ]
-        return (
-            coo.groupBy(id_col)
-            .agg(*aggs)
-            .select(
-                F.col(id_col),
-                F.array(*[F.col(f"_c{i}") for i in range(dim)])
-                .cast("array<float>")
-                .alias(out_col),
-            )
-        )
-    # r14 fused shape, ONE exchange: repartition the exploded tokens by the
-    # id once, then both aggregations (tf per (id, dim); entries per id)
-    # reuse that partitioning (hash(id) clusters any (id, *) grouping), and
-    # the norm + densify are higher-order expressions over the collected
-    # (dim, tf) entries — no tf/norm self-join, no O(nnz * dim) CASE pivot.
-    # Values are bit-identical to the r13 path: tf and tf^2 sums are exact
+    # ONE exchange: repartition the exploded tokens by the id once, then
+    # both aggregations (tf per (id, dim); entries per id) reuse that
+    # partitioning (hash(id) clusters any (id, *) grouping), and the norm +
+    # densify are higher-order expressions over the collected (dim, tf)
+    # entries — no tf/norm self-join, no O(nnz * dim) CASE pivot
+    # (OPTIMIZATION_r14.md §4). Values are bit-identical to
+    # hashed_term_vectors' sparse weights: tf and tf^2 sums are exact
     # integer arithmetic in any order, and w = tf / sqrt(sum tf^2) is the
     # same single division (oracle-checked: pipeline_docs_to_ann,
     # text_hashing_knn, embedding_label_separation).

@@ -1,11 +1,12 @@
 """SparkSession factory with scale-appropriate defaults.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]``; the configs below are
-the ones that matter identically on a 1000-executor cluster: AQE on (runtime
-re-plan, skew-join handling, partition coalescing), Arrow on (the pandas-UDF
-hot path moves columnar batches, the analog of the reference's Arrow IPC
-storage + dense GPU scans, format/storage.cpp:183-226), UTC session time so
-timestamp semantics match any SQL oracle.
+Local runs use ``local[$SPARK_GRAFT_CPUS]``, by default every core this
+process may run on; the configs below are the ones that matter identically
+on a 1000-executor cluster: AQE on (runtime re-plan, skew-join handling,
+partition coalescing), Arrow on (the pandas-UDF hot path moves columnar
+batches, the analog of the reference's Arrow IPC storage + dense GPU scans,
+format/storage.cpp:183-226), UTC session time so timestamp semantics match
+any SQL oracle.
 """
 
 from __future__ import annotations
@@ -13,8 +14,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def get_spark(
@@ -25,13 +24,18 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``spark.sql.shuffle.partitions`` defaults to the core count rather than
-    Spark's 200: at 100 TB the real setting comes from AQE advisory sizes,
-    locally 200 tiny tasks just add scheduler overhead.
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS``, else the cores in this
+    process's affinity mask (not the machine's count, which a container
+    or taskset may not grant). ``spark.sql.shuffle.partitions`` defaults
+    to ``$SPARK_GRAFT_SHUFFLE_PARTITIONS``, else that resolved core count
+    rather than Spark's 200: at 100 TB the real setting comes from AQE
+    advisory sizes, locally 200 tiny tasks just add scheduler overhead.
     """
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(
+        cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
+        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") or cpus
     )
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     # Pre-fault the whole heap at JVM start (-Xms = -Xmx + AlwaysPreTouch):
@@ -60,10 +64,7 @@ def get_spark(
         # nearly every row; scripts/ab_parallelism_first.py). At cluster
         # scale this is the setting that sizes partitions by bytes
         # (guide §2.2), not a local-core-count tune.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

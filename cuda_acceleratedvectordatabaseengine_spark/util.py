@@ -155,19 +155,6 @@ def drop_oversized_buckets(
     return df.join(F.broadcast(hot), list(keys), "left_anti")
 
 
-# Candidate-pair generation shape for the bucket-LSH family (minhash bands,
-# simhash blocks, hyperplane tables, cluster buckets): "group_explode"
-# (r15 default) = ONE groupBy(bucket keys) collecting the bucket's members,
-# the size cap as a filter on the collected array (subsumes
-# drop_oversized_buckets' count pass + broadcast anti-join), and a<b pairs
-# emitted by a two-level explode — 2 exchanges total (group + final
-# distinct) where the r14 self-join shape paid the hot-bucket aggregate,
-# the anti-join, BOTH self-join sides, and the distinct. "self_join" keeps
-# the r14 shape for A/B (scripts/ab_bucket_pairs.py asserts identical
-# output).
-BUCKET_PAIRS_IMPL = "group_explode"
-
-
 def bucket_candidate_pairs(
     rows: DataFrame,
     keys: "list[str]",
@@ -201,14 +188,14 @@ def bucket_candidate_pairs(
     shape: an uncapped degenerate bucket must not be collected into a
     single >2 GB array row.
 
-    ``impl`` overrides the module default per call site: a caller whose
-    bucket relation is already persisted (both self-join sides become
-    cache reads) measures slightly faster with ``"self_join"`` —
-    scripts/ab_bucket_pairs.py, the dedup_lsh_recall row.
+    ``impl="self_join"`` forces the self-join shape at one call site: a
+    caller whose bucket relation is already persisted (both self-join
+    sides become cache reads) measures slightly faster with it — the
+    dedup_lsh_recall row, OPTIMIZATION_r15.md §3.
     """
     from pyspark.sql import functions as F
 
-    if max_size is None or (impl or BUCKET_PAIRS_IMPL) == "self_join":
+    if max_size is None or impl == "self_join":
         rows = drop_oversized_buckets(rows, keys, max_size)
         sel_a = [F.col(id_col).alias(out_a)] + (
             [F.col(payload_col).alias(out_pa)] if payload_col else []
@@ -238,14 +225,16 @@ def bucket_candidate_pairs(
         "_a",
         F.explode(F.expr("slice(ms, _i + 2, size(ms))")).alias("_b"),
     )
+    # A bucket holding the same id twice puts equal ids side by side in
+    # the sorted array; drop those identity pairs like the self-join's a<b.
     if payload_col:
-        return rhs.select(
+        return rhs.where(F.col("_a.i") < F.col("_b.i")).select(
             F.col("_a.i").alias(out_a),
             F.col("_b.i").alias(out_b),
             F.col("_a.p").alias(out_pa),
             F.col("_b.p").alias(out_pb),
         ).distinct()
-    return rhs.select(
+    return rhs.where(F.col("_a") < F.col("_b")).select(
         F.col("_a").alias(out_a), F.col("_b").alias(out_b)
     ).distinct()
 

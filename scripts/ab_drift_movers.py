@@ -55,7 +55,7 @@ def main() -> None:
     )
     spark = get_spark(app_name="cavde-ab-drift")
     spark.range(1000).selectExpr("sum(id)").collect()
-    ncpu = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    ncpu = spark.sparkContext.defaultParallelism
     spark.range(ncpu * 4, numPartitions=ncpu).mapInArrow(
         lambda it: it, "id long"
     ).count()

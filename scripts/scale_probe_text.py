@@ -175,7 +175,7 @@ class phase:
 
 work = tempfile.mkdtemp(prefix="cavde_scale_text_")
 out = {"n_docs": N_DOCS, "parts": PARTS,
-       "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32")}
+       "cpus": spark.sparkContext.defaultParallelism}
 try:
     corpus_path = os.path.join(work, "docs")
     with phase("synth_write_corpus"):

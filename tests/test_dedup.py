@@ -399,20 +399,20 @@ def test_fuzzy_edit_pairs_validation(spark, docs):
 
 
 def test_minhash_verify_impls_identical(spark, docs):
-    """r15: the array_intersect verification must emit exactly the r14
-    shingle-join shape's rows — pair set AND jaccard values."""
+    """The array_intersect verification must emit exactly the rows of the
+    flat shingle-table join (two joins back to the shingle table, a
+    per-pair count, two size joins) — pair set AND jaccard values.
+    ngram_jaccard_pairs computes that join over every pair sharing a
+    shingle, so with verify=True and no LSH misses the two must agree."""
     got = {}
-    for impl in ("array_intersect", "shingle_join"):
-        dedup.MINHASH_VERIFY_IMPL = impl
+    for name, op in (
+        ("array_intersect", dedup.minhash_dedup_pairs),
+        ("shingle_join", dedup.ngram_jaccard_pairs),
+    ):
         dedup.shared_cache.release()
-        try:
-            got[impl] = sorted(
-                (r["doc_id_a"], r["doc_id_b"], round(r["jaccard"], 12))
-                for r in dedup.minhash_dedup_pairs(
-                    docs, threshold=0.5
-                ).collect()
-            )
-        finally:
-            dedup.MINHASH_VERIFY_IMPL = "array_intersect"
+        got[name] = sorted(
+            (r["doc_id_a"], r["doc_id_b"], round(r["jaccard"], 12))
+            for r in op(docs, threshold=0.5).collect()
+        )
     assert got["array_intersect"] == got["shingle_join"]
     assert got["array_intersect"], "fixture must produce pairs"

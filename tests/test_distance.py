@@ -131,8 +131,7 @@ def test_task_workspace_pid_guard_and_reuse():
 
     ws1 = D.task_workspace()
     ws2 = D.task_workspace()
-    if D.WS_PERSIST:
-        assert ws1 is ws2
+    assert ws1 is ws2
     V = np.arange(12, dtype=np.float64).reshape(4, 3)
     Q = np.arange(6, dtype=np.float64).reshape(2, 3)[::-1].copy()
     got = D.pairwise(D.L2, V, Q, ws=D.task_workspace())
@@ -141,5 +140,4 @@ def test_task_workspace_pid_guard_and_reuse():
     # simulated fork: a different PID must get a fresh pool
     D._TASK_WS_PID = -1
     ws3 = D.task_workspace()
-    if D.WS_PERSIST:
-        assert ws3 is not None and D._TASK_WS_PID != -1
+    assert ws3 is not ws1 and D._TASK_WS_PID != -1

@@ -327,10 +327,13 @@ def test_matryoshka_validation(spark, corpus, queries):
 
 
 def test_topk_merge_single_exchange_equals_two_window(spark):
-    """r14 one-exchange T4 merge: the min-distance aggregate dedup + shared
-    rank window must return EXACTLY the rows of the r13 two-window shape,
+    """The one-exchange merge (min-distance aggregate dedup + shared rank
+    window) must return EXACTLY the rows of the two-window shape (a
+    row_number dedup window per (query_id, id), then the rank window),
     including multi-list duplicates with differing distances (keep the
     min) and (distance, id) tie-breaks."""
+    from pyspark.sql import Window
+
     rows = [
         # (query_id, id, distance) — id 7 appears twice for q1 (keep 0.5),
         # q2 has a distance tie broken by id
@@ -340,14 +343,19 @@ def test_topk_merge_single_exchange_equals_two_window(spark):
     cand = spark.createDataFrame(
         rows, "query_id long, id long, distance double"
     )
-    prev = knn.TOPK_SINGLE_EXCHANGE
-    try:
-        knn.TOPK_SINGLE_EXCHANGE = True
-        a = {tuple(r) for r in knn.topk_per_query(cand, 3).collect()}
-        knn.TOPK_SINGLE_EXCHANGE = False
-        b = {tuple(r) for r in knn.topk_per_query(cand, 3).collect()}
-    finally:
-        knn.TOPK_SINGLE_EXCHANGE = prev
+    a = {tuple(r) for r in knn.topk_per_query(cand, 3).collect()}
+    dd = Window.partitionBy("query_id", "id").orderBy(F.col("distance").asc())
+    rk = Window.partitionBy("query_id").orderBy(
+        F.col("distance").asc(), F.col("id").asc()
+    )
+    two_window = (
+        cand.withColumn("__dd", F.row_number().over(dd))
+        .filter(F.col("__dd") == 1)
+        .withColumn("rank", F.row_number().over(rk))
+        .filter(F.col("rank") <= 3)
+        .select("query_id", "rank", "id", "distance")
+    )
+    b = {tuple(r) for r in two_window.collect()}
     assert a == b
     assert (1, 1, 7, 0.5) in a  # dedup kept the min distance
     # q2 tie at 1.0 broke to the smaller id at rank 2

@@ -49,3 +49,22 @@ def test_no_udf_named_symbols():
             if re.search(r"def\s+\w*_udf\s*\(", line):
                 hits.append(f"{path.relative_to(PKG.parent)}:{lineno}")
     assert not hits, "rename *_udf factories: " + ", ".join(hits)
+
+
+# Every env var the package reads, by name. A new SPARK_GRAFT_* switch or
+# a module-level *_IMPL global is a hidden knob no caller sets: settle the
+# A/B, keep the winner, delete the other arm instead.
+ENV_NAMES = {"CPUS", "SHUFFLE_PARTITIONS", "DRIVER_MEM", "PRETOUCH", "SF_DIR"}
+
+
+def test_no_hidden_knobs():
+    env, impl = set(), []
+    for path in sorted(PKG.rglob("*.py")):
+        src = path.read_text()
+        env.update(re.findall(r"SPARK_GRAFT_([A-Z0-9_]+)", src))
+        impl += [
+            f"{path.relative_to(PKG.parent)}: {m}"
+            for m in re.findall(r"^([A-Z0-9_]*_IMPL)\s*[:=]", src, re.M)
+        ]
+    assert env == ENV_NAMES
+    assert not impl, "module-level *_IMPL switches: " + ", ".join(impl)

@@ -822,26 +822,29 @@ def test_dedup_paragraphs_plan_has_no_shuffle(spark):
 
 
 def test_dense_hashed_vectors_fused_equals_case(spark):
-    """r14 fused densify is value-identical to the r13 CASE pivot
-    (exact float equality, including docs with empty/whitespace text
-    and colliding hash buckets)."""
-    from cuda_acceleratedvectordatabaseengine_spark.operators import textops
-
+    """The fused densify is value-identical to a SUM(CASE dim=i) pivot of
+    hashed_term_vectors' sparse weights (exact float equality, including
+    docs with empty/whitespace text and colliding hash buckets)."""
     docs = spark.createDataFrame(
         [(1, "alpha beta alpha gamma"), (2, "beta beta"), (3, ""),
          (4, "  "), (5, "one two three four five six seven eight")],
         "doc_id long, text string",
     )
-    prev = textops.DENSE_VECTOR_IMPL
-    try:
-        textops.DENSE_VECTOR_IMPL = "fused"
-        a = {r["doc_id"]: tuple(r["vector"])
-             for r in textops.dense_hashed_vectors(docs, dim=16).collect()}
-        textops.DENSE_VECTOR_IMPL = "case"
-        b = {r["doc_id"]: tuple(r["vector"])
-             for r in textops.dense_hashed_vectors(docs, dim=16).collect()}
-    finally:
-        textops.DENSE_VECTOR_IMPL = prev
+    a = {r["doc_id"]: tuple(r["vector"])
+         for r in textops.dense_hashed_vectors(docs, dim=16).collect()}
+    coo = textops.hashed_term_vectors(docs, dim=16)
+    # 8 distinct tokens over 16 buckets: at least two share a bucket
+    assert coo.filter(F.col("doc_id") == 5).count() < 8
+    case = coo.groupBy("doc_id").agg(*[
+        F.coalesce(F.sum(F.when(F.col("dim") == i, F.col("w"))), F.lit(0.0))
+        .alias(f"_c{i}")
+        for i in range(16)
+    ]).select(
+        "doc_id",
+        F.array(*[F.col(f"_c{i}") for i in range(16)])
+        .cast("array<float>").alias("vector"),
+    )
+    b = {r["doc_id"]: tuple(r["vector"]) for r in case.collect()}
     assert a == b
     assert set(a) == {1, 2, 5}  # token-less docs yield no vector (both forms)
     assert all(len(v) == 16 for v in a.values())

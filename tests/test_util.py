@@ -122,9 +122,10 @@ def test_sample_head_tier_column_name_collision(spark):
 
 
 # ---------------------------------------------------------------------------
-# bucket_candidate_pairs (r15): the one-exchange group-explode pair
-# generator must emit EXACTLY the self-join shape's pairs, including the
-# oversized-bucket cap semantics it subsumes from drop_oversized_buckets.
+# bucket_candidate_pairs: the one-exchange group-explode pair generator must
+# emit EXACTLY the self-join shape's pairs, including the oversized-bucket
+# cap semantics it subsumes from drop_oversized_buckets and the strict a<b
+# that keeps a repeated id from pairing with itself.
 # ---------------------------------------------------------------------------
 
 
@@ -149,7 +150,12 @@ def _pairs(df):
 def test_bucket_candidate_pairs_matches_self_join(spark):
     from cuda_acceleratedvectordatabaseengine_spark import util
 
-    src = _bucketed(spark)
+    # (3,'d') holds id 11 twice: a repeated id must not pair with itself
+    dup = spark.createDataFrame(
+        [(3, "d", 11), (3, "d", 11), (3, "d", 12)],
+        "band int, bh string, doc_id int",
+    )
+    src = _bucketed(spark).unionByName(dup)
     got = {}
     for impl in ("group_explode", "self_join"):
         got[impl] = _pairs(
@@ -160,7 +166,7 @@ def test_bucket_candidate_pairs_matches_self_join(spark):
     # (1,'z') is dropped whole at cap 3; (1,2) appears once despite two
     # buckets; pairs are a < b
     assert got["group_explode"] == got["self_join"] == [
-        (1, 2), (1, 3), (2, 3), (5, 6)
+        (1, 2), (1, 3), (2, 3), (5, 6), (11, 12)
     ]
 
 
@@ -178,7 +184,11 @@ def test_bucket_candidate_pairs_cap_boundary_keeps_exact_size(spark):
 def test_bucket_candidate_pairs_payload_variant(spark):
     from cuda_acceleratedvectordatabaseengine_spark import util
 
-    rows = [(0, 1, "p1"), (0, 2, "p2"), (0, 3, "p3")]
+    # block 1 holds doc 4 twice
+    rows = [
+        (0, 1, "p1"), (0, 2, "p2"), (0, 3, "p3"),
+        (1, 4, "p4"), (1, 4, "p4"), (1, 5, "p5"),
+    ]
     src = spark.createDataFrame(rows, "blk int, doc_id int, sig string")
     for impl in ("group_explode", "self_join"):
         out = sorted(
@@ -189,7 +199,8 @@ def test_bucket_candidate_pairs_payload_variant(spark):
             ).collect()
         )
         assert out == [
-            (1, 2, "p1", "p2"), (1, 3, "p1", "p3"), (2, 3, "p2", "p3")
+            (1, 2, "p1", "p2"), (1, 3, "p1", "p3"), (2, 3, "p2", "p3"),
+            (4, 5, "p4", "p5"),
         ], impl
 
 
