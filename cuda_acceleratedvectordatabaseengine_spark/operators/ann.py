@@ -198,30 +198,26 @@ def lsh_bucket_keys(
     )
     src = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vector"))
 
-    def sign_buckets(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def sign_buckets(batches):
+        from ..functions import arrowkit as AK
+
         P = bplanes.value
         n_t, n_p, _ = P.shape
         weights = (1 << np.arange(n_p)).astype(np.int64)
-        for pdf in batches:
-            V = np.array([np.asarray(v) for v in pdf["vector"]], dtype=np.float64)
-            if V.size == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            ids = pdf["vec_id"].to_numpy()
-            frames = []
-            for t in range(n_t):
-                signs = (V @ P[t].T) > 0  # (n, n_planes)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": ids,
-                            "table_id": t,
-                            "bucket": signs @ weights,
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
+            V = AK.list_matrix(rb, "vector")
+            ids = AK.column(rb, "vec_id", np.int64)
+            yield AK.batch(
+                vec_id=np.tile(ids, n_t),
+                table_id=np.repeat(np.arange(n_t, dtype=np.int32), len(ids)),
+                bucket=np.concatenate(
+                    [((V @ P[t].T) > 0) @ weights for t in range(n_t)]
+                ),
+            )
 
-    return src.mapInPandas(sign_buckets, schema=out_schema)
+    return src.mapInArrow(sign_buckets, schema=out_schema)
 
 
 def lsh_near_dup_pairs(

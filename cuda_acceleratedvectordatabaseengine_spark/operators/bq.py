@@ -36,12 +36,10 @@ from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..functions import distance as D
-from ..sources.epochs import EpochManager, Manifest, prune_lists
-from . import knn
-from .ivf import IVFIndex, resolve_nprobe, select_nprobe_lists
+from ..sources.epochs import EpochManager
+from .codes import CodeIndex, encode_codes
+from .ivf import IVFIndex
 
 # popcount lookup for uint8 — np.bitwise_count needs numpy>=2; the LUT is
 # version-proof and the gather is a single vectorized index.
@@ -106,114 +104,20 @@ def encode_bq(
     with codes a ceil(d/8)-byte binary column (contiguous packing like
     PQ/SQ codes)."""
     thresholds = np.ascontiguousarray(thresholds, dtype=np.float64)
-    nbytes = (len(thresholds) + 7) // 8
-    cols = [id_col] + ([list_col] if list_col else []) + [vec_col]
-    out_schema = (
-        f"{id_col} long, " + (f"{list_col} int, " if list_col else "") + "codes binary"
+    return encode_codes(
+        df, lambda V: encode_batch_bq(V, thresholds), id_col, vec_col, list_col
     )
 
-    def enc(batches):
-        import pyarrow as pa
 
-        from ..functions import arrowkit as AK
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            V = AK.list_matrix(rb, vec_col)
-            codes = encode_batch_bq(V, thresholds)
-            out = {id_col: pa.array(AK.column(rb, id_col, np.int64), pa.int64())}
-            if list_col:
-                out[list_col] = pa.array(AK.column(rb, list_col, np.int32), pa.int32())
-            flat = pa.py_buffer(np.ascontiguousarray(codes).tobytes())
-            offs = pa.py_buffer(
-                (np.arange(len(codes) + 1, dtype=np.int32) * nbytes).tobytes()
-            )
-            out["codes"] = pa.BinaryArray.from_buffers(
-                pa.binary(), len(codes), [None, offs, flat]
-            )
-            yield AK.batch(**out)
-
-    return df.select(*cols).mapInArrow(enc, schema=out_schema)
-
-
-def _persist_bq_params(
-    mgr: EpochManager, epoch: int, thresholds: np.ndarray
-) -> None:
-    """O(d) driver-side artifact — direct pyarrow write like codebooks."""
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    t = pa.table(
-        {
-            "pos": pa.array(np.arange(len(thresholds), dtype=np.int32), pa.int32()),
-            "mu": pa.array(thresholds, pa.float64()),
-        }
-    )
-    papq.write_table(t, mgr.bq_params_path(epoch))
-
-
-def _read_bq_params(
-    spark: SparkSession, mgr: EpochManager, epoch: int
-) -> np.ndarray:
-    rows = spark.read.parquet(mgr.bq_params_path(epoch)).collect()
-    mu = np.zeros(len(rows), dtype=np.float64)
-    for r in rows:
-        mu[r["pos"]] = r["mu"]
-    return mu
-
-
-@dataclass
-class IVFBQIndex:
+@dataclass(kw_only=True)
+class IVFBQIndex(CodeIndex):
     """IVF coarse structure + 1-bit sign codes in the same epoch dir.
+    Load, encodes and search are the shared shell (``codes.CodeIndex``);
+    thresholds are a train-time artifact reused by delta encodes."""
 
-    Scope semantics mirror PQ/SQ: a scope="chain" encode covers the
-    epoch's whole chain and serves alone; a scope="delta" encode
-    (``encode_delta``) covers only this epoch's own vectors — the O(delta)
-    maintenance step for incremental adds — and readers fold the chain
-    (``sources.epochs.fold_chain_codes``). Thresholds are a train-time
-    artifact reused by delta encodes."""
+    kind = "bq"
 
-    # recall-stamp namespace (ivf.resolve_nprobe): Hamming sign-bit scan
-    surface = "bq"
-    scan_is_exact = False  # Hamming ordering — tune per-candidate
-
-    spark: SparkSession
-    manager: EpochManager
-    epoch: int
-    centroids: np.ndarray
     thresholds: np.ndarray
-    metric: str
-    nlist: int
-    dimension: int
-    manifest: "Manifest" = None
-    _codes: DataFrame | None = None
-    _vectors: DataFrame | None = None
-
-    @property
-    def codes(self) -> DataFrame:
-        """The chain's LIVE BQ codes — base->tip fold over delta/tombstone
-        epochs (``sources.epochs.fold_chain_codes``, shared with PQ/SQ)."""
-        if self._codes is None:
-            from ..sources.epochs import fold_chain_codes
-
-            self._codes = fold_chain_codes(
-                self.spark, self.manager, self.epoch, "bq"
-            )
-        return self._codes
-
-    @property
-    def vectors(self) -> DataFrame:
-        if self._vectors is None:
-            self._vectors = self.manager.read_vectors(self.spark, self.epoch)
-        return self._vectors
-
-    @property
-    def lists_per_bucket(self) -> "int | None":
-        """Two-level-layout bucket width for this chain (None = flat)."""
-        if not hasattr(self, "_lpb_cache"):
-            self._lpb_cache = self.manager.chain_lists_per_bucket(self.epoch)
-        return self._lpb_cache
 
     @classmethod
     def build_from_ivf(cls, ivf_index: IVFIndex) -> "IVFBQIndex":
@@ -225,163 +129,53 @@ class IVFBQIndex:
         return cls.encode_epoch(ivf_index, thresholds, scope="chain")
 
     @classmethod
-    def encode_delta(cls, ivf_index: IVFIndex) -> "IVFBQIndex":
-        """O(delta) maintenance for an incremental-add epoch: reuse the
-        nearest encoded ancestor's thresholds and encode ONLY this epoch's
-        own vectors; readers fold the chain. Retrain via compaction +
-        build_from_ivf when the corpus mean drifts."""
-        from ..sources.epochs import nearest_sidecar_epoch
-
-        mgr = ivf_index.manager
-        src_epoch = nearest_sidecar_epoch(mgr, ivf_index.epoch, "bq")
-        if src_epoch is None:
-            raise ValueError(
-                f"no BQ-encoded ancestor in the chain of epoch "
-                f"{ivf_index.epoch} — run build_from_ivf first"
-            )
-        thresholds = _read_bq_params(ivf_index.spark, mgr, src_epoch)
-        return cls.encode_epoch(ivf_index, thresholds, scope="delta")
-
-    @classmethod
     def encode_epoch(
         cls, ivf_index: IVFIndex, thresholds: np.ndarray, scope: str = "chain"
     ) -> "IVFBQIndex":
-        """Encode with GIVEN thresholds: scope="chain" encodes the full
-        unioned corpus into this epoch's codes dir; scope="delta" encodes
-        only this epoch's own vectors (the O(delta) step)."""
-        mgr = ivf_index.manager
-        epoch = ivf_index.epoch
-        src = (
-            ivf_index.spark.read.parquet(mgr.vectors_path(epoch))
-            if scope == "delta"
-            else ivf_index.vectors
-        )
-        codes = encode_bq(src, thresholds)
-        from ..sources.epochs import write_list_partitioned
+        """Encode with GIVEN thresholds (``CodeIndex.encode_params``)."""
+        return cls.encode_params(ivf_index, {"thresholds": thresholds}, scope)
 
-        write_list_partitioned(
-            codes, mgr.bq_codes_path(epoch), ivf_index.manifest.nlist,
-            "overwrite",
-        )
-        _persist_bq_params(mgr, epoch, thresholds)
-        manifest = mgr.read_manifest(epoch)
-        manifest.bq = {"nbits": 1, "scope": scope}
-        with open(mgr.manifest_path(epoch), "w") as f:
-            f.write(manifest.to_json())
-        return cls(
-            spark=ivf_index.spark,
-            manager=mgr,
-            epoch=epoch,
-            centroids=ivf_index.centroids,
-            thresholds=thresholds,
-            metric=manifest.metric,
-            nlist=manifest.nlist,
-            dimension=manifest.dimension,
-            manifest=manifest,
-        )
+    @property
+    def code_width(self) -> int:
+        return (self.dimension + 7) // 8
 
     @classmethod
-    def load(
-        cls,
-        spark: SparkSession,
-        base_dir: str,
-        index_name: str,
-        epoch: int | None = None,
-    ) -> "IVFBQIndex":
-        mgr = EpochManager(base_dir, index_name)
-        epoch = mgr.resolve_epoch(epoch)
-        manifest = mgr.read_manifest(epoch)
-        if not manifest.bq:
-            raise ValueError(
-                f"epoch {epoch} has no BQ artifacts — run build_from_ivf on "
-                "the (possibly chained) epoch tip first"
-            )
-        thresholds = _read_bq_params(spark, mgr, epoch)
-        return cls(
-            spark=spark,
-            manager=mgr,
-            epoch=epoch,
-            centroids=mgr.read_centroids(spark, epoch),
-            thresholds=thresholds,
-            metric=manifest.metric,
-            nlist=manifest.nlist,
-            dimension=manifest.dimension,
-            manifest=manifest,
-        )
+    def encode_frame(cls, src, centroids, params):
+        return encode_bq(src, params["thresholds"])
 
-    def search(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: "int | None" = None,
-        metric: str | None = None,
-        rerank_exact: bool = False,
-        rerank_k: int | None = None,
-        query_id_col: str = "query_id",
-        qvec_col: str = "qvec",
-        where: "str | None" = None,
-    ) -> DataFrame:
-        """Probe lists, scan their packed bit codes (XOR + popcount per
-        Arrow batch), merge top-k by Hamming; optionally re-score the top
-        rerank_k candidates exactly against raw vectors. ``metric`` applies
-        to the coarse probe and the exact rerank (default: index metric) —
-        the fine scan is always Hamming over the sign bits."""
-        knn.validate_topk(k)
-        nprobe = resolve_nprobe(self.manifest, nprobe, self.surface)
-        metric = D.parse_metric(metric or self.metric)
-        qids, Q = knn.collect_query_matrix(queries, query_id_col, qvec_col)
-        if len(qids) == 0:
-            raise ValueError("empty query batch")
-        if Q.shape[1] != self.dimension:
-            raise ValueError(
-                f"query dimension {Q.shape[1]} != index dimension {self.dimension}"
-            )
-        probe = select_nprobe_lists(self.centroids, Q, nprobe, metric)
+    @classmethod
+    def stamp(cls, params: dict, scope: str) -> dict:
+        return {"nbits": 1, "scope": scope}
+
+    @classmethod
+    def write_params(cls, mgr: EpochManager, epoch: int, params: dict) -> None:
+        """O(d) driver-side artifact — direct pyarrow write like codebooks."""
+        import pyarrow as pa
+        import pyarrow.parquet as papq
+
+        mu = params["thresholds"]
+        t = pa.table(
+            {
+                "pos": pa.array(np.arange(len(mu), dtype=np.int32), pa.int32()),
+                "mu": pa.array(mu, pa.float64()),
+            }
+        )
+        papq.write_table(t, mgr.bq_params_path(epoch))
+
+    @classmethod
+    def read_params(cls, spark: SparkSession, mgr: EpochManager, epoch: int) -> dict:
+        rows = spark.read.parquet(mgr.bq_params_path(epoch)).collect()
+        mu = np.zeros(len(rows), dtype=np.float64)
+        for r in rows:
+            mu[r["pos"]] = r["mu"]
+        return {"thresholds": mu}
+
+    def list_scorer(self, Q: np.ndarray, metric: str):
+        """Hamming distance of the list's packed codes to the queries'
+        sign bits — the fine scan is always Hamming, whatever ``metric``."""
         Qb = encode_batch_bq(Q, self.thresholds)
-        fetch_k = max(k, rerank_k or 0) if rerank_exact else k
-        by_list: dict[int, np.ndarray] = {}
-        for qi, lists in enumerate(probe):
-            for lid in lists:
-                by_list.setdefault(int(lid), []).append(qi)  # type: ignore[union-attr]
-        by_list = {
-            lid: np.asarray(qs, dtype=np.int64) for lid, qs in by_list.items()
-        }
-        nbytes = (self.dimension + 7) // 8
 
-        def scan(batches):
-            from ..functions import arrowkit as AK
+        def score(codes, lid, qidx, ws):
+            return hamming_matrix(codes, Qb[qidx])
 
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                all_ids = AK.column(rb, "id", np.int64)
-                all_lids = AK.column(rb, "list_id", np.int64)
-                all_codes = AK.binary_matrix(rb, "codes", nbytes)
-                for lid in np.unique(all_lids):
-                    qidx = by_list.get(int(lid))
-                    if qidx is None:
-                        continue
-                    mask = all_lids == lid
-                    ids = all_ids[mask]
-                    dmat = hamming_matrix(all_codes[mask], Qb[qidx])
-                    qcol, flat_ids, flat_d = AK.topk_columns(dmat, ids, fetch_k)
-                    yield AK.batch(
-                        query_id=qids[qidx][qcol], id=flat_ids, distance=flat_d
-                    )
-
-        needed = sorted(by_list)
-        pruned = prune_lists(self.codes, needed, self.lists_per_bucket)
-        if where is not None:
-            pruned = pruned.filter(where)
-        cand = pruned.select("id", "list_id", "codes").mapInArrow(
-            scan, schema=knn.CANDIDATE_SCHEMA
-        )
-        if not rerank_exact:
-            return knn.topk_per_query(cand, k, dedup=True)
-        shortlist = knn.topk_per_query(cand, fetch_k, dedup=True).select(
-            "query_id", "id"
-        )
-        vectors = prune_lists(self.vectors, needed, self.lists_per_bucket)
-        if where is not None:
-            vectors = vectors.filter(where)
-        return knn.exact_rerank(vectors, shortlist, qids, Q, k, metric)
+        return score

@@ -897,28 +897,16 @@ class IVFIndex:
     def _cascade_handle(self):
         """The SQ8 sidecar handle for THIS epoch, or None. Resolution keys
         on the handle's in-memory manifest (deterministic for the handle's
-        lifetime); construction reuses the already-collected centroids, so
-        the only extra I/O is the tiny [vmin, vmax] params parquet."""
+        lifetime) with the shared load rule: a tombstone-only tip takes
+        its params from the nearest SQ-encoded ancestor
+        (``codes.CodeIndex.attach``). Construction reuses the
+        already-collected centroids, so the only extra I/O is the tiny
+        [vmin, vmax] params parquet."""
         if not self._sq_cascade_checked:
             self._sq_cascade_checked = True
-            if getattr(self.manifest, "sq", None):
-                from .sq import IVFSQIndex, _read_sq_params
+            from .codes import codecs
 
-                vmin, vmax = _read_sq_params(
-                    self.spark, self.manager, self.epoch
-                )
-                self._sq_cascade = IVFSQIndex(
-                    spark=self.spark,
-                    manager=self.manager,
-                    epoch=self.epoch,
-                    centroids=self.centroids,
-                    vmin=vmin,
-                    vmax=vmax,
-                    metric=self.manifest.metric,
-                    nlist=self.manifest.nlist,
-                    dimension=self.manifest.dimension,
-                    manifest=self.manifest,
-                )
+            self._sq_cascade = codecs()["sq"].attach(self)
         return self._sq_cascade
 
     def _serving_may_cascade(self) -> bool:

@@ -24,7 +24,7 @@ the kernels' semantics:
 
 Scale shape: codebook training runs on a bounded driver-side sample (the
 reference trains on <=100K vectors, bench/benchmark.cpp:69) — O(sample*d)
-numpy. ENCODING is distributed (mapInPandas over the full corpus), and ADC
+numpy. ENCODING is distributed (mapInArrow over the full corpus), and ADC
 search scans only probed list partitions. Codes are d/dsub bytes per vector
 vs 4*d for float32 — the scan reads ~16-32x less data, which at 100 TB is
 the difference between scanning 3 TB and scanning 100 TB.
@@ -37,15 +37,13 @@ import shutil
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..functions import distance as D
-from ..sources.epochs import EpochManager, Manifest, prune_lists
+from ..sources.epochs import EpochManager
+from .codes import CodeIndex, encode_codes
+from .ivf import IVFIndex
 from .kmeans import TRAIN_SAMPLE_LIMIT, _kmeans_pp_init
-from . import knn
-from .ivf import IVFIndex, resolve_nprobe, select_nprobe_lists
 
 ADC_METRICS = (D.L2, D.INNER_PRODUCT)
 
@@ -263,38 +261,6 @@ def subtract_centroids(
     )
 
 
-def _persist_rotation(mgr: EpochManager, epoch: int, R: np.ndarray) -> None:
-    """Same direct-pyarrow discipline as _persist_codebooks: the rotation
-    is an O(d^2) driver artifact."""
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    d = R.shape[0]
-    offsets = np.arange(d + 1, dtype=np.int32) * d
-    table = pa.table(
-        {
-            "i": pa.array(np.arange(d, dtype=np.int32), pa.int32()),
-            "row": pa.ListArray.from_arrays(
-                pa.array(offsets),
-                pa.array(np.ascontiguousarray(R, dtype=np.float64).reshape(-1)),
-            ),
-        }
-    )
-    path = mgr.rotation_path(epoch)
-    if os.path.isdir(path):
-        shutil.rmtree(path)
-    papq.write_table(table, path)
-
-
-def _read_rotation(spark: SparkSession, mgr: EpochManager, epoch: int) -> np.ndarray:
-    rows = spark.read.parquet(mgr.rotation_path(epoch)).collect()
-    d = len(rows)
-    R = np.zeros((d, d), dtype=np.float64)
-    for r in rows:
-        R[r["i"]] = r["row"]
-    return R
-
-
 def _pq_partial_sums_scanner(cbs: "list[np.ndarray]", dsub: int, vec_col: str):
     """One Lloyd assign+partial-aggregate pass over ALL m subspaces: per
     Arrow batch emits at most sum(kk_i) rows of (subspace, code, cnt,
@@ -389,34 +355,9 @@ def encode(
 ) -> DataFrame:
     """B6 distributed: {id, vector[, list_id]} -> {id[, list_id], codes}."""
     cb = np.ascontiguousarray(codebooks)
-    cols = [id_col] + ([list_col] if list_col else []) + [vec_col]
-    out_schema = (
-        f"{id_col} long, " + (f"{list_col} int, " if list_col else "") + "codes binary"
+    return encode_codes(
+        df, lambda V: encode_batch(V, cb), id_col, vec_col, list_col
     )
-
-    def enc(batches):
-        import pyarrow as pa
-
-        from ..functions import arrowkit as AK
-
-        m = cb.shape[0]
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            V = AK.list_matrix(rb, vec_col)
-            codes = encode_batch(V, cb)
-            out = {id_col: pa.array(AK.column(rb, id_col, np.int64), pa.int64())}
-            if list_col:
-                out[list_col] = pa.array(AK.column(rb, list_col, np.int32), pa.int32())
-            # one contiguous buffer + arithmetic offsets: no bytes objects
-            flat = pa.py_buffer(np.ascontiguousarray(codes).tobytes())
-            offs = pa.py_buffer((np.arange(len(codes) + 1, dtype=np.int32) * m).tobytes())
-            out["codes"] = pa.BinaryArray.from_buffers(
-                pa.binary(), len(codes), [None, offs, flat]
-            )
-            yield AK.batch(**out)
-
-    return df.select(*cols).mapInArrow(enc, schema=out_schema)
 
 
 def adc_tables(Q: np.ndarray, codebooks: np.ndarray, metric: str) -> np.ndarray:
@@ -458,44 +399,6 @@ def reconstruct(codes: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
     )
 
 
-def _persist_codebooks(mgr: EpochManager, epoch: int, codebooks: np.ndarray) -> None:
-    """Codebooks are an O(m*ks*dsub) driver-side artifact (a few MB at
-    most) — write directly with pyarrow like the manifest, instead of
-    paying a Spark job for 4096 rows (measured 5.9s -> ~0.05s);
-    spark.read.parquet reads the single file unchanged."""
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    mm, ks, dsub = codebooks.shape
-    offsets = np.arange(mm * ks + 1, dtype=np.int32) * dsub
-    cb_table = pa.table(
-        {
-            "subspace": pa.array(
-                np.repeat(np.arange(mm, dtype=np.int32), ks), pa.int32()
-            ),
-            "code": pa.array(np.tile(np.arange(ks, dtype=np.int32), mm), pa.int32()),
-            "centroid": pa.ListArray.from_arrays(
-                pa.array(offsets), pa.array(codebooks.reshape(-1))
-            ),
-        }
-    )
-    cb_path = mgr.codebooks_path(epoch)
-    if os.path.isdir(cb_path):  # earlier layout: a Spark-written directory
-        shutil.rmtree(cb_path)
-    papq.write_table(cb_table, cb_path)
-
-
-def _read_codebooks(spark: SparkSession, mgr: EpochManager, epoch: int) -> np.ndarray:
-    man = mgr.read_manifest(epoch)
-    m, nbits = man.pq["m"], man.pq["nbits"]
-    ks, dsub = 2**nbits, man.dimension // m
-    rows = spark.read.parquet(mgr.codebooks_path(epoch)).collect()
-    codebooks = np.zeros((m, ks, dsub), dtype=np.float64)
-    for r in rows:
-        codebooks[r["subspace"], r["code"]] = r["centroid"]
-    return codebooks
-
-
 def nearest_pq_epoch(mgr: EpochManager, epoch: int) -> int | None:
     """Nearest epoch in ``epoch``'s chain (tip first, ``epoch`` excluded)
     that carries PQ artifacts — the codebook source for a delta encode."""
@@ -504,28 +407,15 @@ def nearest_pq_epoch(mgr: EpochManager, epoch: int) -> int | None:
     return nearest_sidecar_epoch(mgr, epoch, "pq")
 
 
-@dataclass
-class IVFPQIndex:
-    """IVF coarse structure + PQ-encoded lists in the same epoch dir."""
+@dataclass(kw_only=True)
+class IVFPQIndex(CodeIndex):
+    """IVF coarse structure + PQ-encoded lists in the same epoch dir. Load,
+    encodes and search are the shared shell (``codes.CodeIndex``); this
+    class adds training and the ADC score."""
 
-    # recall-stamp namespace (ivf.resolve_nprobe): this handle serves the
-    # ADC code scan, so it resolves/stamps suggested_nprobe_pq only
-    surface = "pq"
-    # ADC ordering differs from exact ordering -> the one-pass recall
-    # sweep's prefix-rank argument does not hold; tune per-candidate
-    scan_is_exact = False
+    kind = "pq"
 
-    spark: SparkSession
-    manager: EpochManager
-    epoch: int
-    centroids: np.ndarray
     codebooks: np.ndarray
-    metric: str
-    nlist: int
-    dimension: int
-    # same handle surface as IVFIndex: health checks (streaming/flow.py) and
-    # stream serving (search_stream.py) read .manifest on any loaded index
-    manifest: "Manifest" = None
     # OPQ-lite: orthonormal (d, d) rotation applied to vectors before
     # encoding and to queries before ADC; None = plain PQ
     rotation: "np.ndarray | None" = None
@@ -533,36 +423,6 @@ class IVFPQIndex:
     # v - centroid[list_id] instead of v; ADC tables are then built
     # per (query, probed list) executor-side
     residual: bool = False
-    # codes {id, list_id, codes} and raw vectors (for rerank) resolve
-    # lazily: file listing + schema inference deferred to first access,
-    # keeping handle construction off the build/serve critical path
-    _codes: DataFrame | None = None
-    _vectors: DataFrame | None = None
-
-    @property
-    def codes(self) -> DataFrame:
-        """The chain's LIVE PQ codes — see
-        ``sources.epochs.fold_chain_codes`` (shared with SQ/BQ)."""
-        if self._codes is None:
-            from ..sources.epochs import fold_chain_codes
-
-            self._codes = fold_chain_codes(
-                self.spark, self.manager, self.epoch, "pq"
-            )
-        return self._codes
-
-    @property
-    def vectors(self) -> DataFrame:
-        if self._vectors is None:
-            self._vectors = self.manager.read_vectors(self.spark, self.epoch)
-        return self._vectors
-
-    @property
-    def lists_per_bucket(self) -> "int | None":
-        """Two-level-layout bucket width for this chain (None = flat)."""
-        if not hasattr(self, "_lpb_cache"):
-            self._lpb_cache = self.manager.chain_lists_per_bucket(self.epoch)
-        return self._lpb_cache
 
     @classmethod
     def build_from_ivf(
@@ -613,166 +473,102 @@ class IVFPQIndex:
         rotation: "np.ndarray | None" = None,
         residual: bool = False,
     ) -> "IVFPQIndex":
-        """B6 with GIVEN codebooks (no training): encode, persist codes +
-        codebooks alongside the epoch, stamp the manifest's pq field.
-
-        ``scope="chain"`` encodes the full unioned corpus into this epoch's
-        codes dir (it then serves the whole chain alone). ``scope="delta"``
-        encodes ONLY this epoch's own vectors — the O(delta) maintenance
-        step for incremental adds; readers union the chain's code dirs."""
-        mgr = ivf_index.manager
-        epoch = ivf_index.epoch
-        codebooks = np.ascontiguousarray(codebooks, dtype=np.float64)
-        m, ks, _dsub = codebooks.shape
-        nbits = int(ks).bit_length() - 1  # ks == 2^nbits by construction
-        src = (
-            ivf_index.spark.read.parquet(mgr.vectors_path(epoch))
-            if scope == "delta"
-            else ivf_index.vectors
-        )
-        if residual:
-            src = subtract_centroids(src, ivf_index.centroids)
-        if rotation is not None:
-            src = rotate_vectors(src, rotation)
-        codes = encode(src, codebooks)
-        # same layout policy as the vector epoch write (flat per-list dirs
-        # at small nlist, two-level list_bucket dirs above MAX_LIST_DIRS),
-        # token-routed so every write task carries exactly one output dir
-        from ..sources.epochs import write_list_partitioned
-
-        write_list_partitioned(
-            codes, mgr.codes_path(epoch), ivf_index.manifest.nlist, "overwrite"
-        )
-        _persist_codebooks(mgr, epoch, codebooks)
-        if rotation is not None:
-            _persist_rotation(mgr, epoch, rotation)
-        manifest = mgr.read_manifest(epoch)
-        manifest.pq = {
-            "m": int(m),
-            "nbits": int(nbits),
-            "scope": scope,
-            "rotated": rotation is not None,
+        """B6 with GIVEN codebooks (no training) — ``CodeIndex.encode_params``.
+        ``rotation``/``residual`` select the encoding space, exactly as in
+        ``build_from_ivf``."""
+        params = {
+            "codebooks": np.ascontiguousarray(codebooks, dtype=np.float64),
+            "rotation": rotation,
             "residual": bool(residual),
         }
-        with open(mgr.manifest_path(epoch), "w") as f:
-            f.write(manifest.to_json())
-        # construct the handle directly from what is already in memory —
-        # cls.load would re-collect centroids + codebooks from parquet (two
-        # driver jobs) for values this function just wrote; only the codes
-        # relation is re-read from disk (that IS the new artifact)
-        return cls(
-            spark=ivf_index.spark,
-            manager=mgr,
-            epoch=epoch,
-            centroids=ivf_index.centroids,
-            codebooks=codebooks,
-            metric=manifest.metric,
-            nlist=manifest.nlist,
-            dimension=manifest.dimension,
-            manifest=manifest,
-            rotation=rotation,
-            residual=bool(residual),
-        )
+        return cls.encode_params(ivf_index, params, scope)
+
+    @property
+    def code_width(self) -> int:
+        return self.codebooks.shape[0]
 
     @classmethod
-    def encode_delta(cls, ivf_index: IVFIndex) -> "IVFPQIndex":
-        """O(delta) PQ maintenance for a delta epoch: encode ONLY this
-        epoch's own vectors with the codebooks INHERITED from the nearest
-        PQ-encoded ancestor. Codebooks are train-time artifacts — exactly
-        like centroids, the reference's ``add()`` never retrains them
-        (engine/ivf_flat_index.cpp:148-202 appends to existing lists) — so
-        an incremental add costs one delta-sized encode pass, stays
-        bit-deterministic w.r.t. the original build, and the ancestor's
-        codebooks file is copied into the delta epoch dir so every servable
-        epoch remains self-contained."""
-        mgr = ivf_index.manager
-        if ivf_index.manifest.parent_epoch is None:
-            raise ValueError(
-                "encode_delta requires a delta epoch; full epochs train via "
-                "build_from_ivf or encode via encode_epoch"
-            )
-        anc = nearest_pq_epoch(mgr, ivf_index.epoch)
-        if anc is None:
-            raise ValueError(
-                f"no PQ-encoded ancestor in the chain of epoch "
-                f"{ivf_index.epoch}; train codebooks with build_from_ivf first"
-            )
-        codebooks = _read_codebooks(ivf_index.spark, mgr, anc)
-        # the rotation is a train-time artifact exactly like the codebooks:
-        # a delta encode must run in the SAME rotated space or its codes
-        # would be incomparable with the chain's
-        anc_pq = mgr.read_manifest(anc).pq
-        rotation = None
-        if anc_pq.get("rotated"):
-            rotation = _read_rotation(ivf_index.spark, mgr, anc)
-        return cls.encode_epoch(
-            ivf_index, codebooks, scope="delta", rotation=rotation,
-            residual=bool(anc_pq.get("residual")),
-        )
+    def encode_frame(cls, src, centroids, params):
+        if params["residual"]:
+            src = subtract_centroids(src, centroids)
+        if params["rotation"] is not None:
+            src = rotate_vectors(src, params["rotation"])
+        return encode(src, params["codebooks"])
 
     @classmethod
-    def load(
-        cls, spark: SparkSession, base_dir: str, index_name: str, epoch: int | None = None
-    ) -> "IVFPQIndex":
-        mgr = EpochManager(base_dir, index_name)
-        epoch = mgr.resolve_epoch(epoch)
-        manifest = mgr.read_manifest(epoch)
-        # a tombstone-only tip carries no codes itself; its codebooks come
-        # from the nearest PQ-encoded ancestor (the codes property folds
-        # the chain the same way)
-        cb_epoch = epoch if manifest.pq else (
-            nearest_pq_epoch(mgr, epoch) if manifest.num_tombstones > 0 else None
-        )
-        if cb_epoch is None:
-            raise ValueError(f"epoch {epoch} has no PQ artifacts")
-        codebooks = _read_codebooks(spark, mgr, cb_epoch)
-        cb_pq = mgr.read_manifest(cb_epoch).pq
+    def stamp(cls, params: dict, scope: str) -> dict:
+        m, ks, _dsub = params["codebooks"].shape
+        return {
+            "m": int(m),
+            "nbits": int(ks).bit_length() - 1,  # ks == 2^nbits by construction
+            "scope": scope,
+            "rotated": params["rotation"] is not None,
+            "residual": params["residual"],
+        }
+
+    @classmethod
+    def write_params(cls, mgr: EpochManager, epoch: int, params: dict) -> None:
+        """Codebooks (O(m*ks*dsub)) and the rotation (O(d^2)) are small
+        driver-side artifacts — written directly with pyarrow like the
+        manifest, instead of paying a Spark job for 4096 rows (measured
+        5.9s -> ~0.05s); spark.read.parquet reads the single file."""
+        import pyarrow as pa
+        import pyarrow.parquet as papq
+
+        codebooks, R = params["codebooks"], params["rotation"]
+        mm, ks, dsub = codebooks.shape
+        offsets = np.arange(mm * ks + 1, dtype=np.int32) * dsub
+        tables = {
+            mgr.codebooks_path(epoch): {
+                "subspace": pa.array(
+                    np.repeat(np.arange(mm, dtype=np.int32), ks), pa.int32()
+                ),
+                "code": pa.array(
+                    np.tile(np.arange(ks, dtype=np.int32), mm), pa.int32()
+                ),
+                "centroid": pa.ListArray.from_arrays(
+                    pa.array(offsets), pa.array(codebooks.reshape(-1))
+                ),
+            }
+        }
+        if R is not None:
+            d = R.shape[0]
+            tables[mgr.rotation_path(epoch)] = {
+                "i": pa.array(np.arange(d, dtype=np.int32), pa.int32()),
+                "row": pa.ListArray.from_arrays(
+                    pa.array(np.arange(d + 1, dtype=np.int32) * d),
+                    pa.array(np.ascontiguousarray(R, dtype=np.float64).reshape(-1)),
+                ),
+            }
+        for path, cols in tables.items():
+            if os.path.isdir(path):  # earlier layout: a Spark-written directory
+                shutil.rmtree(path)
+            papq.write_table(pa.table(cols), path)
+
+    @classmethod
+    def read_params(cls, spark: SparkSession, mgr: EpochManager, epoch: int) -> dict:
+        # the rotation and the residual flag are train-time artifacts
+        # exactly like the codebooks: every encode and every ADC table
+        # must run in the SAME (rotated, residual) space as the chain
+        man = mgr.read_manifest(epoch)
+        m, ks = man.pq["m"], 2 ** man.pq["nbits"]
+        codebooks = np.zeros((m, ks, man.dimension // m), dtype=np.float64)
+        for r in spark.read.parquet(mgr.codebooks_path(epoch)).collect():
+            codebooks[r["subspace"], r["code"]] = r["centroid"]
         rotation = None
-        if cb_pq.get("rotated"):
-            rotation = _read_rotation(spark, mgr, cb_epoch)
-        return cls(
-            spark=spark,
-            manager=mgr,
-            epoch=epoch,
-            centroids=mgr.read_centroids(spark, epoch),
-            codebooks=codebooks,
-            metric=manifest.metric,
-            nlist=manifest.nlist,
-            dimension=manifest.dimension,
-            manifest=manifest,
-            rotation=rotation,
-            residual=bool(cb_pq.get("residual")),
-        )
+        if man.pq.get("rotated"):
+            rows = spark.read.parquet(mgr.rotation_path(epoch)).collect()
+            rotation = np.zeros((len(rows), len(rows)), dtype=np.float64)
+            for r in rows:
+                rotation[r["i"]] = r["row"]
+        return {
+            "codebooks": codebooks,
+            "rotation": rotation,
+            "residual": bool(man.pq.get("residual")),
+        }
 
-    def search(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: "int | None" = None,
-        metric: str | None = None,
-        rerank_exact: bool = False,
-        rerank_k: int | None = None,
-        query_id_col: str = "query_id",
-        qvec_col: str = "qvec",
-        where: "str | None" = None,
-    ) -> DataFrame:
-        """T5+T6 (+T7): probe lists, ADC-scan their codes, merge top-k;
-        optionally re-score the top rerank_k candidates exactly.
-
-        ``where``: filtered search — a predicate over the index columns
-        (``id``, ``list_id``) applied inside BOTH the pruned code scan and
-        the rerank join-back (see ``IVFIndex.search``)."""
-        knn.validate_topk(k)
-        nprobe = resolve_nprobe(self.manifest, nprobe, self.surface)
-        metric = D.parse_metric(metric or self.metric)
-        qids, Q = knn.collect_query_matrix(queries, query_id_col, qvec_col)
-        if len(qids) == 0:
-            raise ValueError("empty query batch")
-        if Q.shape[1] != self.dimension:
-            raise ValueError(
-                f"query dimension {Q.shape[1]} != index dimension {self.dimension}"
-            )
-        probe = select_nprobe_lists(self.centroids, Q, nprobe, metric)
+    def list_scorer(self, Q: np.ndarray, metric: str):
+        """T5+T6: ADC lookup tables, summed per probed list's codes."""
         # OPQ-lite: the codes live in rotated space — rotate the queries
         # into it for the ADC tables. Rotation is orthonormal, so the ADC
         # distances stay directly comparable to the exact (unrotated)
@@ -797,101 +593,34 @@ class IVFPQIndex:
             if self.residual
             else adc_tables(Q_adc, self.codebooks, metric)  # (nq, m, ks)
         )
-        fetch_k = max(k, rerank_k or 0) if rerank_exact else k
-
-        by_list: dict[int, list[int]] = {}
-        for qi, lists in enumerate(probe):
-            for lid in lists:
-                by_list.setdefault(int(lid), []).append(qi)
-        m = self.codebooks.shape[0]
         codebooks = self.codebooks
         residual = self.residual
+        m = codebooks.shape[0]
 
-        by_list_np = {
-            lid: np.asarray(qs, dtype=np.int64) for lid, qs in by_list.items()
-        }
+        def score(codes, lid, qidx, ws):
+            # T6 vectorized across the probing queries: accumulate
+            # per-subspace LUT gathers -> (n, nq_sub) in m passes
+            # (m ~ 16) instead of one scan per query
+            const = 0.0
+            if residual:
+                if metric == D.L2:
+                    lut_q = adc_tables(Q_adc[qidx] - C_adc[lid], codebooks, metric)
+                else:  # IP: -(q.v) = -(q.c) + [-(q.r) LUT]
+                    lut_q = adc_tables(Q_adc[qidx], codebooks, metric)
+                    const = -(Q_adc[qidx] @ C_adc[lid])[None, :]
+            else:
+                lut_q = lut[qidx]  # (nqs, m, ks)
+            # dmat + the per-subspace gather both come from the reused
+            # workspace: values identical to the fresh zeros/+= form (same
+            # accumulation order)
+            dmat = D._ws_block(ws, "dmat", len(codes), len(qidx))
+            dmat.fill(0.0)
+            g = D._ws_block(ws, "g", len(codes), len(qidx))
+            for i in range(m):
+                np.take(lut_q[:, i, :].T, codes[:, i], axis=0, out=g)
+                dmat += g
+            if residual and metric != D.L2:
+                dmat += const
+            return dmat
 
-        def scan(batches):
-            from ..functions import arrowkit as AK
-            from ..functions.distance import _ws_block
-
-            ws: dict = D.task_workspace()  # process-pooled workspace (r14)
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                all_ids = AK.column(rb, "id", np.int64)
-                all_lids = AK.column(rb, "list_id", np.int64)
-                all_codes = AK.binary_matrix(rb, "codes", m)
-                for lid in np.unique(all_lids):
-                    qidx = by_list_np.get(int(lid))
-                    if qidx is None:
-                        continue
-                    mask = all_lids == lid
-                    ids, codes = all_ids[mask], all_codes[mask]
-                    # T6 vectorized across the probing queries: accumulate
-                    # per-subspace LUT gathers -> (n, nq_sub) in m passes
-                    # (m ~ 16) instead of one scan per query
-                    const = 0.0
-                    if residual:
-                        if metric == D.L2:
-                            lut_q = adc_tables(
-                                Q_adc[qidx] - C_adc[lid], codebooks, metric
-                            )
-                        else:  # IP: -(q.v) = -(q.c) + [-(q.r) LUT]
-                            lut_q = adc_tables(
-                                Q_adc[qidx], codebooks, metric
-                            )
-                            const = -(Q_adc[qidx] @ C_adc[lid])[None, :]
-                    else:
-                        lut_q = lut[qidx]  # (nqs, m, ks)
-                    # dmat + the per-subspace gather both come from the
-                    # reused workspace: values identical to the fresh
-                    # zeros/+= form (same accumulation order)
-                    dmat = _ws_block(ws, "dmat", len(ids), len(qidx))
-                    dmat.fill(0.0)
-                    g = _ws_block(ws, "g", len(ids), len(qidx))
-                    for i in range(m):
-                        np.take(lut_q[:, i, :].T, codes[:, i], axis=0, out=g)
-                        dmat += g
-                    if residual and metric != D.L2:
-                        dmat += const
-                    qcol, flat_ids, flat_d = AK.topk_columns(dmat, ids, fetch_k)
-                    yield AK.batch(
-                        query_id=qids[qidx][qcol], id=flat_ids, distance=flat_d
-                    )
-
-        needed = sorted({int(x) for x in probe.ravel()})
-        pruned = prune_lists(self.codes, needed, self.lists_per_bucket)
-        if where is not None:
-            pruned = pruned.filter(where)
-        cand = pruned.select("id", "list_id", "codes").mapInArrow(
-            scan, schema=knn.CANDIDATE_SCHEMA
-        )
-        if not rerank_exact:
-            return knn.topk_per_query(cand, k, dedup=True)
-        shortlist = knn.topk_per_query(cand, fetch_k, dedup=True).select(
-            "query_id", "id"
-        )
-        return self.rerank(shortlist, qids, Q, k, metric, lists=needed, where=where)
-
-    def rerank(
-        self,
-        shortlist: DataFrame,
-        qids: np.ndarray,
-        Q: np.ndarray,
-        k: int,
-        metric: str,
-        lists: "list[int] | None" = None,
-        where: "str | None" = None,
-    ) -> DataFrame:
-        """T7: exact re-scoring of ADC candidates against the raw vectors
-        (shared join-back kernel, knn.exact_rerank). ``lists`` prunes the
-        vector scan to the probed partitions — candidates live only there
-        by construction, so the join-back must not read the full corpus;
-        ``where`` keeps a filtered search's predicate on the rerank source."""
-        vectors = self.vectors
-        if lists is not None:
-            vectors = prune_lists(vectors, lists, self.lists_per_bucket)
-        if where is not None:
-            vectors = vectors.filter(where)
-        return knn.exact_rerank(vectors, shortlist, qids, Q, k, metric)
+        return score

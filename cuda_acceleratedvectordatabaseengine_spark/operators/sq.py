@@ -32,17 +32,15 @@ SQ behavior; retrain + re-encode via a new epoch when drift matters.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..functions import distance as D
-from ..sources.epochs import EpochManager, Manifest, prune_lists
-from . import knn
-from .ivf import IVFIndex, resolve_nprobe, select_nprobe_lists
+from ..sources.epochs import EpochManager
+from .codes import CodeIndex, encode_codes
+from .ivf import IVFIndex
 
 
 def train_sq(df: DataFrame, vec_col: str = "vector") -> tuple[np.ndarray, np.ndarray]:
@@ -105,120 +103,22 @@ def encode_sq(
     with codes a d-byte binary column (same contiguous packing as PQ)."""
     vmin = np.ascontiguousarray(vmin, dtype=np.float64)
     vmax = np.ascontiguousarray(vmax, dtype=np.float64)
-    d = len(vmin)
-    cols = [id_col] + ([list_col] if list_col else []) + [vec_col]
-    out_schema = (
-        f"{id_col} long, " + (f"{list_col} int, " if list_col else "") + "codes binary"
+    return encode_codes(
+        df, lambda V: encode_batch_sq(V, vmin, vmax), id_col, vec_col, list_col
     )
 
-    def enc(batches):
-        import pyarrow as pa
 
-        from ..functions import arrowkit as AK
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            V = AK.list_matrix(rb, vec_col)
-            codes = encode_batch_sq(V, vmin, vmax)
-            out = {id_col: pa.array(AK.column(rb, id_col, np.int64), pa.int64())}
-            if list_col:
-                out[list_col] = pa.array(AK.column(rb, list_col, np.int32), pa.int32())
-            flat = pa.py_buffer(np.ascontiguousarray(codes).tobytes())
-            offs = pa.py_buffer(
-                (np.arange(len(codes) + 1, dtype=np.int32) * d).tobytes()
-            )
-            out["codes"] = pa.BinaryArray.from_buffers(
-                pa.binary(), len(codes), [None, offs, flat]
-            )
-            yield AK.batch(**out)
-
-    return df.select(*cols).mapInArrow(enc, schema=out_schema)
-
-
-def _persist_sq_params(
-    mgr: EpochManager, epoch: int, vmin: np.ndarray, vmax: np.ndarray
-) -> None:
-    """O(d) driver-side artifact — direct pyarrow write like codebooks."""
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    t = pa.table(
-        {
-            "pos": pa.array(np.arange(len(vmin), dtype=np.int32), pa.int32()),
-            "vmin": pa.array(vmin, pa.float64()),
-            "vmax": pa.array(vmax, pa.float64()),
-        }
-    )
-    papq.write_table(t, mgr.sq_params_path(epoch))
-
-
-def _read_sq_params(
-    spark: SparkSession, mgr: EpochManager, epoch: int
-) -> tuple[np.ndarray, np.ndarray]:
-    rows = spark.read.parquet(mgr.sq_params_path(epoch)).collect()
-    d = len(rows)
-    vmin = np.zeros(d, dtype=np.float64)
-    vmax = np.zeros(d, dtype=np.float64)
-    for r in rows:
-        vmin[r["pos"]] = r["vmin"]
-        vmax[r["pos"]] = r["vmax"]
-    return vmin, vmax
-
-
-@dataclass
-class IVFSQIndex:
+@dataclass(kw_only=True)
+class IVFSQIndex(CodeIndex):
     """IVF coarse structure + SQ8-encoded lists in the same epoch dir.
+    Load, encodes and search are the shared shell (``codes.CodeIndex``);
+    params ([vmin, vmax]) are reused by delta encodes, and out-of-range
+    values clip saturating."""
 
-    Scope semantics mirror PQ: a scope="chain" encode (full build or
-    compaction re-encode) covers the epoch's whole chain and serves alone;
-    a scope="delta" encode (``encode_delta``) covers only this epoch's own
-    vectors — the O(delta) maintenance step for incremental adds — and
-    readers fold the chain (``sources.epochs.fold_chain_codes``). Params
-    ([vmin, vmax]), like PQ codebooks, are train-time artifacts reused by
-    delta encodes; out-of-range values clip saturating."""
+    kind = "sq"
 
-    # recall-stamp namespace (ivf.resolve_nprobe): SQ8-decoded scan
-    surface = "sq"
-    scan_is_exact = False  # quantized ordering — tune per-candidate
-
-    spark: SparkSession
-    manager: EpochManager
-    epoch: int
-    centroids: np.ndarray
     vmin: np.ndarray
     vmax: np.ndarray
-    metric: str
-    nlist: int
-    dimension: int
-    manifest: "Manifest" = None
-    _codes: DataFrame | None = None
-    _vectors: DataFrame | None = None
-
-    @property
-    def codes(self) -> DataFrame:
-        """The chain's LIVE SQ codes — base->tip fold over delta/tombstone
-        epochs (``sources.epochs.fold_chain_codes``, shared with PQ/BQ)."""
-        if self._codes is None:
-            from ..sources.epochs import fold_chain_codes
-
-            self._codes = fold_chain_codes(
-                self.spark, self.manager, self.epoch, "sq"
-            )
-        return self._codes
-
-    @property
-    def vectors(self) -> DataFrame:
-        if self._vectors is None:
-            self._vectors = self.manager.read_vectors(self.spark, self.epoch)
-        return self._vectors
-
-    @property
-    def lists_per_bucket(self) -> "int | None":
-        """Two-level-layout bucket width for this chain (None = flat)."""
-        if not hasattr(self, "_lpb_cache"):
-            self._lpb_cache = self.manager.chain_lists_per_bucket(self.epoch)
-        return self._lpb_cache
 
     @classmethod
     def build_from_ivf(cls, ivf_index: IVFIndex) -> "IVFSQIndex":
@@ -229,25 +129,6 @@ class IVFSQIndex:
         return cls.encode_epoch(ivf_index, vmin, vmax, scope="chain")
 
     @classmethod
-    def encode_delta(cls, ivf_index: IVFIndex) -> "IVFSQIndex":
-        """O(delta) maintenance for an incremental-add epoch: reuse the
-        nearest encoded ancestor's [vmin, vmax] and encode ONLY this
-        epoch's own vectors; readers fold the chain. New values clip
-        saturating to the trained range (standard SQ drift behavior) —
-        retrain via compaction + build_from_ivf when drift matters."""
-        from ..sources.epochs import nearest_sidecar_epoch
-
-        mgr = ivf_index.manager
-        src_epoch = nearest_sidecar_epoch(mgr, ivf_index.epoch, "sq")
-        if src_epoch is None:
-            raise ValueError(
-                f"no SQ-encoded ancestor in the chain of epoch "
-                f"{ivf_index.epoch} — run build_from_ivf first"
-            )
-        vmin, vmax = _read_sq_params(ivf_index.spark, mgr, src_epoch)
-        return cls.encode_epoch(ivf_index, vmin, vmax, scope="delta")
-
-    @classmethod
     def encode_epoch(
         cls,
         ivf_index: IVFIndex,
@@ -255,143 +136,54 @@ class IVFSQIndex:
         vmax: np.ndarray,
         scope: str = "chain",
     ) -> "IVFSQIndex":
-        """Encode with GIVEN params: scope="chain" encodes the full unioned
-        corpus into this epoch's codes dir; scope="delta" encodes only this
-        epoch's own vectors (the O(delta) step)."""
-        mgr = ivf_index.manager
-        epoch = ivf_index.epoch
-        src = (
-            ivf_index.spark.read.parquet(mgr.vectors_path(epoch))
-            if scope == "delta"
-            else ivf_index.vectors
-        )
-        codes = encode_sq(src, vmin, vmax)
-        from ..sources.epochs import write_list_partitioned
+        """Encode with GIVEN params (``CodeIndex.encode_params``)."""
+        return cls.encode_params(ivf_index, {"vmin": vmin, "vmax": vmax}, scope)
 
-        write_list_partitioned(
-            codes, mgr.sq_codes_path(epoch), ivf_index.manifest.nlist,
-            "overwrite",
-        )
-        _persist_sq_params(mgr, epoch, vmin, vmax)
-        manifest = mgr.read_manifest(epoch)
-        manifest.sq = {"nbits": 8, "scope": scope}
-        with open(mgr.manifest_path(epoch), "w") as f:
-            f.write(manifest.to_json())
-        return cls(
-            spark=ivf_index.spark,
-            manager=mgr,
-            epoch=epoch,
-            centroids=ivf_index.centroids,
-            vmin=vmin,
-            vmax=vmax,
-            metric=manifest.metric,
-            nlist=manifest.nlist,
-            dimension=manifest.dimension,
-            manifest=manifest,
-        )
+    @property
+    def code_width(self) -> int:
+        return self.dimension
 
     @classmethod
-    def load(
-        cls,
-        spark: SparkSession,
-        base_dir: str,
-        index_name: str,
-        epoch: int | None = None,
-    ) -> "IVFSQIndex":
-        mgr = EpochManager(base_dir, index_name)
-        epoch = mgr.resolve_epoch(epoch)
-        manifest = mgr.read_manifest(epoch)
-        if not manifest.sq:
-            raise ValueError(
-                f"epoch {epoch} has no SQ artifacts — run build_from_ivf on "
-                "the (possibly chained) epoch tip first"
-            )
-        vmin, vmax = _read_sq_params(spark, mgr, epoch)
-        return cls(
-            spark=spark,
-            manager=mgr,
-            epoch=epoch,
-            centroids=mgr.read_centroids(spark, epoch),
-            vmin=vmin,
-            vmax=vmax,
-            metric=manifest.metric,
-            nlist=manifest.nlist,
-            dimension=manifest.dimension,
-            manifest=manifest,
+    def encode_frame(cls, src, centroids, params):
+        return encode_sq(src, params["vmin"], params["vmax"])
+
+    @classmethod
+    def stamp(cls, params: dict, scope: str) -> dict:
+        return {"nbits": 8, "scope": scope}
+
+    @classmethod
+    def write_params(cls, mgr: EpochManager, epoch: int, params: dict) -> None:
+        """O(d) driver-side artifact — direct pyarrow write like codebooks."""
+        import pyarrow as pa
+        import pyarrow.parquet as papq
+
+        vmin = params["vmin"]
+        t = pa.table(
+            {
+                "pos": pa.array(np.arange(len(vmin), dtype=np.int32), pa.int32()),
+                "vmin": pa.array(vmin, pa.float64()),
+                "vmax": pa.array(params["vmax"], pa.float64()),
+            }
         )
+        papq.write_table(t, mgr.sq_params_path(epoch))
 
-    def search(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: "int | None" = None,
-        metric: str | None = None,
-        rerank_exact: bool = False,
-        rerank_k: int | None = None,
-        query_id_col: str = "query_id",
-        qvec_col: str = "qvec",
-        where: "str | None" = None,
-    ) -> DataFrame:
-        """Probe lists, scan their SQ codes (decode per Arrow batch -> dense
-        float block -> shared BLAS kernel), merge top-k; optionally re-score
-        the top rerank_k candidates exactly against the raw vectors."""
-        knn.validate_topk(k)
-        nprobe = resolve_nprobe(self.manifest, nprobe, self.surface)
-        metric = D.parse_metric(metric or self.metric)
-        qids, Q = knn.collect_query_matrix(queries, query_id_col, qvec_col)
-        if len(qids) == 0:
-            raise ValueError("empty query batch")
-        if Q.shape[1] != self.dimension:
-            raise ValueError(
-                f"query dimension {Q.shape[1]} != index dimension {self.dimension}"
-            )
-        probe = select_nprobe_lists(self.centroids, Q, nprobe, metric)
-        fetch_k = max(k, rerank_k or 0) if rerank_exact else k
-        by_list: dict[int, np.ndarray] = {}
-        for qi, lists in enumerate(probe):
-            for lid in lists:
-                by_list.setdefault(int(lid), []).append(qi)  # type: ignore[union-attr]
-        by_list = {
-            lid: np.asarray(qs, dtype=np.int64) for lid, qs in by_list.items()
-        }
-        vmin, vmax, d = self.vmin, self.vmax, self.dimension
+    @classmethod
+    def read_params(cls, spark: SparkSession, mgr: EpochManager, epoch: int) -> dict:
+        rows = spark.read.parquet(mgr.sq_params_path(epoch)).collect()
+        vmin = np.zeros(len(rows), dtype=np.float64)
+        vmax = np.zeros(len(rows), dtype=np.float64)
+        for r in rows:
+            vmin[r["pos"]] = r["vmin"]
+            vmax[r["pos"]] = r["vmax"]
+        return {"vmin": vmin, "vmax": vmax}
 
-        def scan(batches):
-            from ..functions import arrowkit as AK
+    def list_scorer(self, Q: np.ndarray, metric: str):
+        """Decode the list's codes to a dense float block (asymmetric: raw
+        query vs decoded corpus) and score with the shared BLAS kernel."""
+        vmin, vmax = self.vmin, self.vmax
 
-            ws: dict = D.task_workspace()  # process-pooled workspace (r14)
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                all_ids = AK.column(rb, "id", np.int64)
-                all_lids = AK.column(rb, "list_id", np.int64)
-                all_codes = AK.binary_matrix(rb, "codes", d)
-                for lid in np.unique(all_lids):
-                    qidx = by_list.get(int(lid))
-                    if qidx is None:
-                        continue
-                    mask = all_lids == lid
-                    ids = all_ids[mask]
-                    V = decode_batch_sq(all_codes[mask], vmin, vmax)
-                    dmat = D.pairwise(metric, V, Q[qidx], ws=ws)
-                    qcol, flat_ids, flat_d = AK.topk_columns(dmat, ids, fetch_k)
-                    yield AK.batch(
-                        query_id=qids[qidx][qcol], id=flat_ids, distance=flat_d
-                    )
+        def score(codes, lid, qidx, ws):
+            V = decode_batch_sq(codes, vmin, vmax)
+            return D.pairwise(metric, V, Q[qidx], ws=ws)
 
-        needed = sorted(by_list)
-        pruned = prune_lists(self.codes, needed, self.lists_per_bucket)
-        if where is not None:
-            pruned = pruned.filter(where)
-        cand = pruned.select("id", "list_id", "codes").mapInArrow(
-            scan, schema=knn.CANDIDATE_SCHEMA
-        )
-        if not rerank_exact:
-            return knn.topk_per_query(cand, k, dedup=True)
-        shortlist = knn.topk_per_query(cand, fetch_k, dedup=True).select(
-            "query_id", "id"
-        )
-        vectors = prune_lists(self.vectors, needed, self.lists_per_bucket)
-        if where is not None:
-            vectors = vectors.filter(where)
-        return knn.exact_rerank(vectors, shortlist, qids, Q, k, metric)
+        return score

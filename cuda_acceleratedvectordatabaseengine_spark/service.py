@@ -31,6 +31,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from .functions import distance as D
+from .operators.codes import codecs, sidecar_maintainers
 from .operators.ivf import IVFIndex, SearchRequest
 from .operators.pq import IVFPQIndex
 from .sources.epochs import EpochManager
@@ -342,9 +343,7 @@ class VectorEngine:
         # a PQ sidecar built OUT-OF-BAND on a flat-configured index
         # (cfg m == 0, so _encode_delta_if_pq no-ops) would leave the
         # new tip codeless and break IVFPQIndex.load on it
-        from .streaming.ingest_stream import _sidecar_maintainers
-
-        for kind, enc in _sidecar_maintainers(base):
+        for kind, enc in sidecar_maintainers(base):
             if kind == "pq" and cfg["m"] > 0:
                 continue  # _encode_delta_if_pq above already encoded it
             if not getattr(new.manifest, kind):
@@ -446,9 +445,7 @@ class VectorEngine:
         # delta epoch too, and SQ/BQ (or an out-of-band PQ) sidecar must
         # not go codeless on the new tip — a cold index would silently
         # stop cascading after its first shard merge
-        from .streaming.ingest_stream import _sidecar_maintainers
-
-        for kind, enc in _sidecar_maintainers(base):
+        for kind, enc in sidecar_maintainers(base):
             if kind == "pq" and cfg["m"] > 0:
                 continue  # _encode_delta_if_pq above already encoded it
             if not getattr(new.manifest, kind):
@@ -511,9 +508,7 @@ class VectorEngine:
         ``storage=``."""
         cfg = self._read_config(index)
         base = IVFIndex.load(self.spark, self.data_path, index)
-        from .streaming.ingest_stream import _sidecar_maintainers
-
-        maintainers = _sidecar_maintainers(base)
+        maintainers = sidecar_maintainers(base)
         rt = cfg.get("recall_target")
         cold_flat = cfg.get("storage") == "cold" and cfg["m"] == 0
         idx = IVFIndex.build(
@@ -575,9 +570,7 @@ class VectorEngine:
         unless asked. Returns the new epoch id."""
         self._read_config(index)
         base = IVFIndex.load(self.spark, self.data_path, index)
-        from .streaming.ingest_stream import _sidecar_maintainers
-
-        maintainers = _sidecar_maintainers(base)
+        maintainers = sidecar_maintainers(base)
         idx = base.compact(activate=False)
         for _kind, enc in maintainers:
             idx.manifest = enc(idx, "chain")
@@ -678,19 +671,8 @@ class VectorEngine:
         cfg = self._read_config(index)
         if variant is None:
             variant = "pq" if cfg["m"] > 0 else "flat"
-        if variant == "sq":
-            from .operators.sq import IVFSQIndex
-
-            loader = IVFSQIndex
-        elif variant == "bq":
-            from .operators.bq import IVFBQIndex
-
-            loader = IVFBQIndex
-        elif variant == "pq":
-            loader = IVFPQIndex
-        elif variant == "flat":
-            loader = IVFIndex
-        else:
+        loader = IVFIndex if variant == "flat" else codecs().get(variant)
+        if loader is None:
             raise ValueError(f"unknown index variant {variant!r}")
         handle = loader.load(self.spark, self.data_path, index, epoch)
         self._indices[index] = handle  # atomic swap (dict assignment)

@@ -20,12 +20,13 @@ Correctness and maintenance properties:
   activation — the batch never served and is NOT a duplicate: the
   interrupted step is RESUMED (re-run the compaction decision and
   activate) instead of silently losing the batch to GC.
-- **PQ maintenance**: when the active epoch is PQ-encoded, every delta
-  epoch is encoded BEFORE activation with the chain's inherited codebooks
-  (``IVFPQIndex.encode_delta`` — O(delta), codebooks are train-time
-  artifacts and are never retrained on ingest), and a compacted epoch is
-  re-encoded in full with the same codebooks. Activating a codeless epoch
-  on a PQ index would make every subsequent load fail.
+- **Sidecar maintenance**: when the active chain carries PQ / SQ / BQ
+  codes, every delta epoch is encoded BEFORE activation with the chain's
+  inherited params (``operators.codes.sidecar_maintainers`` — O(delta),
+  params are train-time artifacts and are never retrained on ingest), and
+  a compacted epoch is re-encoded in full with the same params.
+  Activating a codeless epoch on a quantized index would make every
+  subsequent load fail.
 - **One activation per batch**: the delta is written inactive, the
   compaction decision is made, and exactly one epoch (delta OR compacted)
   is activated; ``on_epoch`` fires once per batch with the epoch that
@@ -53,69 +54,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.codes import sidecar_maintainers
 from ..operators.ivf import IVFIndex
 
 BATCH_ID_KEY = "ingest_batch_id"
-
-
-def _sidecar_maintainers(idx: IVFIndex):
-    """[(kind, encode(new_ivf, scope) -> Manifest)] for every sidecar
-    encoding (PQ / SQ / BQ) present on the active chain. The tip usually
-    carries the artifacts; a tombstone-only tip (a delete) does not — look
-    through the chain like the serving loaders do."""
-    from ..sources.epochs import nearest_sidecar_epoch
-
-    mgr = idx.manager
-    out = []
-    for kind in ("pq", "sq", "bq"):
-        src_epoch = (
-            idx.epoch
-            if getattr(idx.manifest, kind)
-            else nearest_sidecar_epoch(mgr, idx.epoch, kind)
-        )
-        if src_epoch is None:
-            continue
-        if kind == "pq":
-            from ..operators.pq import (
-                IVFPQIndex,
-                _read_codebooks,
-                _read_rotation,
-            )
-
-            cb = _read_codebooks(idx.spark, mgr, src_epoch)
-            src_pq = mgr.read_manifest(src_epoch).pq
-            # the OPQ rotation and the residual flag are train-time
-            # artifacts exactly like the codebooks — streamed deltas must
-            # encode in the same (rotated, residual) space or their codes
-            # are incomparable with the chain's
-            rot = (
-                _read_rotation(idx.spark, mgr, src_epoch)
-                if src_pq.get("rotated")
-                else None
-            )
-            res = bool(src_pq.get("residual"))
-            enc = (
-                lambda new, scope, cb=cb, rot=rot, res=res:
-                IVFPQIndex.encode_epoch(
-                    new, cb, scope=scope, rotation=rot, residual=res
-                ).manifest
-            )
-        elif kind == "sq":
-            from ..operators.sq import IVFSQIndex, _read_sq_params
-
-            vmin, vmax = _read_sq_params(idx.spark, mgr, src_epoch)
-            enc = lambda new, scope, a=vmin, b=vmax: IVFSQIndex.encode_epoch(
-                new, a, b, scope=scope
-            ).manifest
-        else:
-            from ..operators.bq import IVFBQIndex, _read_bq_params
-
-            th = _read_bq_params(idx.spark, mgr, src_epoch)
-            enc = lambda new, scope, t=th: IVFBQIndex.encode_epoch(
-                new, t, scope=scope
-            ).manifest
-        out.append((kind, enc))
-    return out
 
 
 def ingest_batch(
@@ -155,7 +97,7 @@ def ingest_batch(
     # Sidecar-encoded index (PQ / SQ / BQ): every activated epoch must
     # carry codes, and the params (codebooks / [vmin,vmax] / thresholds)
     # are INHERITED train-time artifacts, like centroids.
-    maintainers = _sidecar_maintainers(idx)
+    maintainers = sidecar_maintainers(idx)
     if pending:
         new = IVFIndex.load(idx.spark, mgr.base_dir, mgr.index_name, max(pending))
         kind = "compacted" if new.manifest.parent_epoch is None else "delta"

@@ -133,20 +133,20 @@ def score_stream_against_queries(
         ]
     )
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
+    def score(batches):
+        from ..functions import arrowkit as AK
+
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            V = np.array([np.asarray(v) for v in pdf["vector"]], dtype=np.float64)
-            ids = pdf["id"].to_numpy(np.int64)
+            V = AK.list_matrix(rb, "vector")
+            ids = AK.column(rb, "id", np.int64)
             Dm = D.pairwise(metric, V, Q)  # (n, nq)
             n, nq = Dm.shape
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids, n),
-                    "id": np.tile(ids, nq),
-                    "distance": Dm.T.ravel(),
-                }
+            yield AK.batch(
+                query_id=np.repeat(qids, n),
+                id=np.tile(ids, nq),
+                distance=Dm.T.ravel(),
             )
 
-    return vector_stream.mapInPandas(score, schema=out_schema)
+    return vector_stream.select("id", "vector").mapInArrow(score, schema=out_schema)

@@ -179,3 +179,29 @@ def test_bq_encode_delta_requires_encoded_ancestor(spark, emb_corpus, tmp_path):
     chained = base.add(emb_corpus.limit(5).withColumn("id", F.col("id") + 100000))
     with pytest.raises(ValueError, match="no BQ-encoded ancestor"):
         bq.IVFBQIndex.encode_delta(chained)
+
+
+def test_bq_chain_respects_tombstones(spark, emb_corpus, tmp_path):
+    """BQ serving over a chain with a tombstone tip: the handle loads
+    (thresholds resolved from the BQ-encoded ancestor), codes exclude
+    deleted ids, and a deleted vector is unreachable through the Hamming
+    scan + rerank."""
+    init = np.asarray(
+        [r["vector"] for r in emb_corpus.orderBy("id").limit(6).collect()],
+        dtype=np.float64,
+    )
+    base = ivf.IVFIndex.build(
+        emb_corpus, str(tmp_path), "bq_del", nlist=6, init=init, train=False
+    )
+    bq.IVFBQIndex.build_from_ivf(base)
+    victims = [r["id"] for r in emb_corpus.limit(7).collect()]
+    base.delete(victims)
+
+    served = bq.IVFBQIndex.load(spark, str(tmp_path), "bq_del")
+    n = emb_corpus.count()
+    assert served.codes.count() == n - len(victims)
+    qdf = emb_corpus.filter(F.col("id") == victims[0]).select(
+        F.col("id").alias("query_id"), F.col("vector").alias("qvec")
+    )
+    got = served.search(qdf, k=3, nprobe=6, rerank_exact=True, rerank_k=10).collect()
+    assert got and all(r["id"] not in set(victims) for r in got)

@@ -646,6 +646,48 @@ def test_pq_chain_respects_tombstones(spark, emb_corpus, tmp_path):
     assert got and all(r["id"] not in set(victims) for r in got)
 
 
+
+def test_sq_cascade_survives_delete(spark, emb_corpus, tmp_path):
+    """The SQ cascade keeps serving after a delete: the tombstone-only tip
+    resolves the sidecar from its SQ-encoded ancestor, so cascade="sq"
+    still answers — k rows per query, no deleted id, and every live query
+    vector ranks itself first."""
+    from cuda_acceleratedvectordatabaseengine_spark.operators.sq import (
+        IVFSQIndex,
+    )
+
+    init = np.asarray(
+        [r["vector"] for r in emb_corpus.orderBy("id").limit(6).collect()],
+        dtype=np.float64,
+    )
+    base = ivf.IVFIndex.build(
+        emb_corpus, str(tmp_path), "sq_casc_del", nlist=6, init=init, train=False
+    )
+    IVFSQIndex.build_from_ivf(base)
+    victims = [r["id"] for r in emb_corpus.orderBy("id").limit(4).collect()]
+    base.delete(victims)
+
+    served = ivf.IVFIndex.load(spark, str(tmp_path), "sq_casc_del")
+    live = [
+        r["id"]
+        for r in emb_corpus.filter(~F.col("id").isin(victims))
+        .orderBy("id").limit(6).collect()
+    ]
+    qdf = emb_corpus.filter(F.col("id").isin(victims[:2] + live)).select(
+        F.col("id").alias("query_id"), F.col("vector").alias("qvec")
+    )
+    k = 5
+    got = served.search(qdf, k=k, nprobe=6, cascade="sq").collect()
+    by_q: dict = {}
+    for r in got:
+        by_q.setdefault(r["query_id"], []).append(r)
+    assert sorted(by_q) == sorted(victims[:2] + live)
+    assert all(len(rs) == k for rs in by_q.values())
+    assert all(r["id"] not in set(victims) for r in got)
+    for qid in live:
+        assert min(by_q[qid], key=lambda r: r["rank"])["id"] == qid
+
+
 # -- range (radius) search --------------------------------------------------
 
 

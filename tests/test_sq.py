@@ -175,3 +175,28 @@ def test_sq_encode_delta_requires_encoded_ancestor(spark, emb_corpus, tmp_path):
     chained = base.add(emb_corpus.limit(5).withColumn("id", F.col("id") + 100000))
     with pytest.raises(ValueError, match="no SQ-encoded ancestor"):
         sq.IVFSQIndex.encode_delta(chained)
+
+
+def test_sq_chain_respects_tombstones(spark, emb_corpus, tmp_path):
+    """SQ serving over a chain with a tombstone tip: the handle loads
+    (params resolved from the SQ-encoded ancestor), codes exclude deleted
+    ids, and a deleted vector is unreachable through scan + rerank."""
+    init = np.asarray(
+        [r["vector"] for r in emb_corpus.orderBy("id").limit(6).collect()],
+        dtype=np.float64,
+    )
+    base = ivf.IVFIndex.build(
+        emb_corpus, str(tmp_path), "sq_del", nlist=6, init=init, train=False
+    )
+    sq.IVFSQIndex.build_from_ivf(base)
+    victims = [r["id"] for r in emb_corpus.limit(7).collect()]
+    base.delete(victims)
+
+    served = sq.IVFSQIndex.load(spark, str(tmp_path), "sq_del")
+    n = emb_corpus.count()
+    assert served.codes.count() == n - len(victims)
+    qdf = emb_corpus.filter(F.col("id") == victims[0]).select(
+        F.col("id").alias("query_id"), F.col("vector").alias("qvec")
+    )
+    got = served.search(qdf, k=3, nprobe=6, rerank_exact=True, rerank_k=10).collect()
+    assert got and all(r["id"] not in set(victims) for r in got)
