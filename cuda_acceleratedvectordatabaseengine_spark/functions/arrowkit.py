@@ -131,7 +131,8 @@ def list_matrix(
       resolves list offsets (including sliced batches) without copying
       values; the reshape requires every row to have the same length,
       which the engine's fixed-dimension schema guarantees (dimension is
-      checked per request, server/query_service.cpp:115-119);
+      checked per request, server/query_service.cpp:115-119) — a ragged
+      or null row raises ``ValueError``;
     - packed ``binary`` (epoch ``vector_layout="packed_f32"``,
       sources/epochs.py): each row is d float32-LE values in one byte
       string — decoded as a frombuffer view, no per-element work. This
@@ -182,12 +183,23 @@ def list_matrix(
             .view(np.float32)
         )
         return M.astype(dtype, copy=False)
-    values = arr.flatten().to_numpy(zero_copy_only=False)
     if n == 0:
         return np.empty((0, 0), dtype=dtype)
-    d, rem = divmod(len(values), n)
-    if rem != 0:
-        raise ValueError(f"ragged list column {col!r}: {len(values)} values / {n} rows")
+    # a null row holds no values and a ragged row shifts every later one:
+    # either would reshape into a matrix of the wrong rows, so both raise
+    if arr.null_count:
+        raise ValueError(f"list column {col!r} has {arr.null_count} null rows")
+    if pa.types.is_fixed_size_list(arr.type):
+        d = arr.type.list_size
+    else:
+        widths = np.diff(arr.offsets.to_numpy())
+        d = int(widths[0])
+        if (widths != d).any():
+            raise ValueError(
+                f"ragged list column {col!r}: row lengths "
+                f"{int(widths.min())}..{int(widths.max())}"
+            )
+    values = arr.flatten().to_numpy(zero_copy_only=False)
     M = values.reshape(n, d)
     return M.astype(dtype, copy=False)
 

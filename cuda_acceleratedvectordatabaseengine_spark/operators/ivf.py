@@ -487,18 +487,21 @@ def _list_scanner(
     """mapInArrow over the pruned {id, vector, list_id} scan: score each
     inverted list in the batch against exactly the queries that probed it
     — zero-copy matrix views, batched per-query top-k (no Python loops
-    over rows or queries).
+    over rows or queries) — and emit ONE top-k per query per task,
+    deduplicated by id (minimum distance) with ties broken by id
+    (``knn.merge_topk_arrays``). The merge downstream then reads at most
+    tasks x nq x k candidate rows, however many batches and lists a task
+    scanned.
 
     Query-locality fusion (cost-gated, default effectively work-neutral
     — see ``FUSE_INFLATION_CAP`` for the measured rationale): when a
     batch's probed lists share one query set (single-list batches; the
     full-probe shape), the scanner scores them in ONE GEMM against the
     query union, masking non-probed (list, query) pairs to +inf before
-    the top-k — identical candidates, fewer BLAS calls, and batch-level
-    (not list-level) top-k emission shrinks the merge input. With
-    disjoint per-list query sets the union would inflate FLOPs, which
-    the interleaved A/B showed is a net loss on >=1K-row lists, so the
-    gate keeps the exact per-list loop there."""
+    the top-k — identical candidates, fewer BLAS calls. With disjoint
+    per-list query sets the union would inflate FLOPs, which the
+    interleaved A/B showed is a net loss on >=1K-row lists, so the gate
+    keeps the exact per-list loop there."""
     import pyarrow as pa
 
     from ..functions import arrowkit as AK
@@ -514,62 +517,75 @@ def _list_scanner(
         for lid in lists:
             by_list.setdefault(int(lid), []).append(qi)
     by_list_np = {lid: np.asarray(qs, dtype=np.int64) for lid, qs in by_list.items()}
+    # held candidate rows are merged down to <= nq*k once they pass this
+    compact_at = max(2 * len(qids) * k, 1 << 16)
+
+    def batch_candidates(rb, ws):
+        """(query_id, id, distance) arrays of one batch's per-list top-k."""
+        ids = AK.column(rb, "id", np.int64)
+        lids = AK.column(rb, "list_id", np.int64)
+        V = AK.list_matrix(rb, "vector")
+        ul, inv = np.unique(lids, return_inverse=True)
+        qsets = [by_list_np.get(int(lid)) for lid in ul]
+        pidx = [i for i, qs in enumerate(qsets) if qs is not None]
+        if not pidx:
+            return
+        rows_per = np.bincount(inv, minlength=len(ul))
+        flops_exact = float(sum(int(rows_per[i]) * len(qsets[i]) for i in pidx))
+        q_union = (
+            qsets[pidx[0]]
+            if len(pidx) == 1
+            else np.unique(np.concatenate([qsets[i] for i in pidx]))
+        )
+        probed_ul = np.zeros(len(ul), dtype=bool)
+        probed_ul[pidx] = True
+        rmask = probed_ul[inv]
+        flops_fused = float(int(rmask.sum())) * len(q_union)
+        if flops_fused <= fuse_cap * flops_exact:
+            # one GEMM over the batch's probed rows x the query union,
+            # non-probed (list, query) pairs masked out of the top-k
+            sub_ids = ids[rmask]
+            dmat = D.pairwise(metric, V[rmask], Q[q_union], ws=ws)
+            if len(pidx) > 1:
+                pos = {int(q): j for j, q in enumerate(q_union)}
+                P = np.zeros((len(ul), len(q_union)), dtype=bool)
+                for i in pidx:
+                    P[i, [pos[int(q)] for q in qsets[i]]] = True
+                dmat[~P[inv[rmask]]] = np.inf
+            # k clipped to candidate count (ivf_flat_index.cpp:232-233)
+            qcol, flat_ids, flat_d = AK.topk_columns(dmat, sub_ids, k)
+            keep = np.isfinite(flat_d)
+            yield qids[q_union[qcol[keep]]], flat_ids[keep], flat_d[keep]
+            return
+        for i in pidx:
+            qidx = qsets[i]
+            mask = inv == i
+            dmat = D.pairwise(metric, V[mask], Q[qidx], ws=ws)  # (n, nq_sub)
+            qcol, flat_ids, flat_d = AK.topk_columns(dmat, ids[mask], k)
+            yield qids[qidx][qcol], flat_ids, flat_d
+
+    def merged(parts):
+        q, _rank, i, d = knn.merge_topk_arrays(
+            *(np.concatenate(col) for col in zip(*parts)), k
+        )
+        return q, i, d
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ws = D.task_workspace()  # process-pooled score blocks (PERF.md r9)
+        parts: list = []
+        held = 0
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            ids = AK.column(rb, "id", np.int64)
-            lids = AK.column(rb, "list_id", np.int64)
-            V = AK.list_matrix(rb, "vector")
-            ul, inv = np.unique(lids, return_inverse=True)
-            qsets = [by_list_np.get(int(lid)) for lid in ul]
-            pidx = [i for i, qs in enumerate(qsets) if qs is not None]
-            if not pidx:
-                continue
-            rows_per = np.bincount(inv, minlength=len(ul))
-            flops_exact = float(
-                sum(int(rows_per[i]) * len(qsets[i]) for i in pidx)
-            )
-            q_union = (
-                qsets[pidx[0]]
-                if len(pidx) == 1
-                else np.unique(np.concatenate([qsets[i] for i in pidx]))
-            )
-            probed_ul = np.zeros(len(ul), dtype=bool)
-            probed_ul[pidx] = True
-            rmask = probed_ul[inv]
-            flops_fused = float(int(rmask.sum())) * len(q_union)
-            if flops_fused <= fuse_cap * flops_exact:
-                # one GEMM over the batch's probed rows x the query union,
-                # non-probed (list, query) pairs masked out of the top-k
-                sub_ids = ids[rmask]
-                dmat = D.pairwise(metric, V[rmask], Q[q_union], ws=ws)
-                if len(pidx) > 1:
-                    pos = {int(q): j for j, q in enumerate(q_union)}
-                    P = np.zeros((len(ul), len(q_union)), dtype=bool)
-                    for i in pidx:
-                        P[i, [pos[int(q)] for q in qsets[i]]] = True
-                    dmat[~P[inv[rmask]]] = np.inf
-                # k clipped to candidate count (ivf_flat_index.cpp:232-233)
-                qcol, flat_ids, flat_d = AK.topk_columns(dmat, sub_ids, k)
-                keep = np.isfinite(flat_d)
-                if not keep.all():
-                    qcol, flat_ids, flat_d = qcol[keep], flat_ids[keep], flat_d[keep]
-                yield AK.batch(
-                    query_id=qids[q_union[qcol]], id=flat_ids, distance=flat_d
-                )
-                continue
-            for i in pidx:
-                qidx = qsets[i]
-                mask = inv == i
-                sub_ids, sub_V = ids[mask], V[mask]
-                dmat = D.pairwise(metric, sub_V, Q[qidx], ws=ws)  # (n, nq_sub)
-                qcol, flat_ids, flat_d = AK.topk_columns(dmat, sub_ids, k)
-                yield AK.batch(
-                    query_id=qids[qidx][qcol], id=flat_ids, distance=flat_d
-                )
+            for part in batch_candidates(rb, ws):
+                parts.append(part)
+                held += len(part[0])
+            if held > compact_at:
+                parts = [merged(parts)]
+                held = len(parts[0][0])
+        if parts:
+            q, i, d = merged(parts)
+            yield AK.batch(query_id=q, id=i, distance=d)
 
     return scan
 
@@ -677,6 +693,45 @@ def _range_list_scanner(
                     )
 
     return scan
+
+
+@dataclass
+class ProbedScan:
+    """A flat search up to its T4 merge: ``cand`` holds one top-``fetch_k``
+    per query per scan task (``_list_scanner``), so it has at most
+    ``max_candidates`` rows — a list's rows can sit in several tasks (a
+    delta chain's legs, split files), so the bound counts tasks, not
+    probed lists. ``merge`` finishes the search with either T4 merge
+    (``knn.topk_per_query`` or ``knn.local_topk``)."""
+
+    cand: DataFrame
+    pruned: DataFrame  # the probe-pruned scan, the rerank join-back source
+    qids: np.ndarray
+    Q: np.ndarray
+    k: int
+    fetch_k: int
+    metric: str
+    rerank_exact: bool
+    scan_tasks: int
+
+    @property
+    def max_candidates(self) -> int:
+        return len(self.qids) * self.scan_tasks * self.fetch_k
+
+    def merge(self, topk) -> DataFrame:
+        # dedup-by-id merge (T4): ids are unique per list, but the reference
+        # dedups on merge regardless (ivf_flat_index.cpp:493-504)
+        if not self.rerank_exact:
+            return topk(self.cand, self.k)
+        shortlist = topk(self.cand, self.fetch_k).select("query_id", "id")
+        # rerank source = the SAME pruned scan: every shortlist candidate
+        # lives in a probed list by construction, so joining back against
+        # the full chain would read nlist/nprobe x more partitions for
+        # exactly zero extra matches
+        rescored = knn.exact_rescore(
+            self.pruned, shortlist, self.qids, self.Q, self.metric
+        )
+        return topk(rescored, self.k)
 
 
 @dataclass
@@ -1004,7 +1059,11 @@ class IVFIndex:
         where: "str | Column | None" = None,
         cascade: str = "auto",
     ) -> DataFrame:
-        """Batched IVF search -> {query_id, rank, id, distance}.
+        """Batched IVF search -> {query_id, rank, id, distance}, as a lazy
+        plan: the query batch and the probe run now, the pruned scan and
+        the distributed T4 merge (``knn.topk_per_query``) run at the
+        caller's action. ``search_local`` runs the same search at once,
+        merging on the driver.
 
         ``rerank_exact``/``rerank_k`` (proto/vdb.proto:22 — declared for any
         index type): keep the top ``rerank_k`` candidates from the probed
@@ -1034,6 +1093,48 @@ class IVFIndex:
         (warm page-cached storage refutes the cascade at every probe
         shape; r8/r10/r11 interleaved A/Bs). ``CASCADE_AUTO_DEFAULT``
         remains the regime-less global override."""
+        scan = self._probed_scan(
+            queries, k, nprobe, metric, rerank_exact, rerank_k,
+            query_id_col, qvec_col, where, cascade,
+        )
+        if isinstance(scan, DataFrame):
+            return scan  # the SQ cascade answered
+        return scan.merge(knn.topk_per_query)
+
+    def search_local(self, queries: DataFrame, k: int, **kw) -> DataFrame:
+        """``search`` (same arguments), executed now with the T4 merge on
+        the driver whenever the candidate relation is bounded by
+        ``knn.LOCAL_MERGE_MAX_ROWS``: the per-task top-k candidates come
+        back in one ``toArrow`` job and merge in numpy, as the reference
+        merges per-list results in host memory
+        (engine/ivf_flat_index.cpp:493-504). The result is then a local
+        DataFrame (``isLocal()``) whose ``collect`` runs no job. Above
+        the bound (a large query batch times k), and on the SQ cascade,
+        the lazy ``search`` plan is returned. ``rerank_exact`` merges both
+        its shortlist and the re-scored rows on the driver."""
+        scan = self._probed_scan(queries, k, **kw)
+        if isinstance(scan, DataFrame):
+            return scan
+        if scan.max_candidates <= knn.LOCAL_MERGE_MAX_ROWS:
+            return scan.merge(knn.local_topk)
+        return scan.merge(knn.topk_per_query)
+
+    def _probed_scan(
+        self,
+        queries: DataFrame,
+        k: int,
+        nprobe: "int | None" = None,
+        metric: str | None = None,
+        rerank_exact: bool = False,
+        rerank_k: int | None = None,
+        query_id_col: str = "query_id",
+        qvec_col: str = "qvec",
+        where: "str | Column | None" = None,
+        cascade: str = "auto",
+    ) -> "ProbedScan | DataFrame":
+        """Everything of a search up to its T4 merge: validation, the
+        query batch, the probe and the pruned per-task top-k scan — or the
+        finished result when the SQ cascade takes the request."""
         knn.validate_topk(k)
         nprobe = self.resolved_nprobe(nprobe)
         metric = D.parse_metric(metric or self.manifest.metric)
@@ -1078,21 +1179,16 @@ class IVFIndex:
         pruned = prune_lists(self.vectors, needed, self.lists_per_bucket)
         if where is not None:
             pruned = pruned.filter(where)
+        # one wave of Python tasks: a delta chain's base and delta legs
+        # (and a list's split files) share tasks instead of queueing a
+        # second wave behind the first
+        tasks = self.spark.sparkContext.defaultParallelism
+        pruned = pruned.coalesce(tasks)
         cand = pruned.select("id", "vector", "list_id").mapInArrow(
             _list_scanner(qids, Q, probe, fetch_k, metric), schema=knn.CANDIDATE_SCHEMA
         )
-        # dedup-by-id merge (T4): ids are unique per list, but the reference
-        # dedups on merge regardless (ivf_flat_index.cpp:493-504)
-        if not rerank_exact:
-            return knn.topk_per_query(cand, k, dedup=True)
-        shortlist = knn.topk_per_query(cand, fetch_k, dedup=True).select(
-            "query_id", "id"
-        )
-        # rerank source = the SAME pruned scan: every shortlist candidate
-        # lives in a probed list by construction, so joining back against
-        # the full chain would read nlist/nprobe x more partitions for
-        # exactly zero extra matches
-        return knn.exact_rerank(pruned, shortlist, qids, Q, k, metric)
+        return ProbedScan(cand, pruned, qids, Q, k, fetch_k, metric,
+                          rerank_exact, tasks)
 
     def list_radii(self) -> np.ndarray:
         """Per-list covering radius: the max Euclidean distance from any
@@ -1603,7 +1699,13 @@ def run_search_batch(
                 "query_id long, qvec array<float>",
             )
             t0 = _time.perf_counter()
-            res = index.search(
+            # an eager group runs now: the flat handle merges on the driver
+            run = (
+                index.search_local
+                if eager and isinstance(index, IVFIndex)
+                else index.search
+            )
+            res = run(
                 qdf,
                 k=p.k,
                 nprobe=p.nprobe,
@@ -1612,7 +1714,7 @@ def run_search_batch(
                 rerank_k=p.rerank_k,
                 where=p.where,
             )
-            if eager:
+            if eager and not res.isLocal():
                 res = res.localCheckpoint(eager=True)
             if recorder is not None:
                 recorder.record(

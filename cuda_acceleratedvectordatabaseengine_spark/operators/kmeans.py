@@ -456,30 +456,19 @@ def _partials_combiner(nlist: int, d: int):
 
 
 def _collect_matrix(df_one_col: DataFrame) -> np.ndarray:
-    """Collect a single fixed-dim ``array<float>`` column to an (n, d)
-    float64 matrix via Arrow (``toArrow`` is an explicit API — no session
-    conf needed; ~10x cheaper than Row collect for 100K vectors). Falls
-    back to Row collect for ragged or non-Arrow-able inputs."""
+    """Collect a single fixed-dim ``array<float>`` (or packed_f32 binary)
+    column to an (n, d) float64 matrix via Arrow (``toArrow`` is an
+    explicit API — no session conf needed; ~10x cheaper than Row collect
+    for 100K vectors). Falls back to Row collect for ragged or
+    non-Arrow-able inputs."""
     try:
         import pyarrow as pa
 
-        col = df_one_col.toArrow().column(0).combine_chunks()
-        n = len(col)
-        if n == 0:
-            return np.empty((0, 0), dtype=np.float64)
-        if pa.types.is_binary(col.type) or pa.types.is_large_binary(col.type):
-            # packed_f32 epoch layout (sources/epochs.py): d float32-LE
-            # bytes per row
-            rb = pa.RecordBatch.from_arrays([col], names=["v"])
-            from ..functions import arrowkit as AK
+        from ..functions import arrowkit as AK
 
-            return AK.list_matrix(rb, "v", np.float64)
-        offsets = col.offsets.to_numpy(zero_copy_only=False)
-        widths = np.diff(offsets)
-        if (widths != widths[0]).any():
-            raise ValueError("ragged vector column")
-        values = col.values.to_numpy(zero_copy_only=False).astype(np.float64)
-        return values[offsets[0] : offsets[-1]].reshape(n, int(widths[0]))
+        col = df_one_col.toArrow().column(0).combine_chunks()
+        rb = pa.RecordBatch.from_arrays([col], names=["v"])
+        return AK.list_matrix(rb, "v", np.float64)
     except Exception:
         rows = df_one_col.collect()
         return np.asarray([r[0] for r in rows], dtype=np.float64)

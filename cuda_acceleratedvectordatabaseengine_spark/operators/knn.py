@@ -50,6 +50,12 @@ MAX_TOPK = 1000  # server/query_service.cpp:77
 # enforce the contract instead of leaving it docstring-only.
 MAX_QUERY_BATCH = 1_000_000
 CANDIDATE_SCHEMA = "query_id long, id long, distance double"
+RESULT_SCHEMA = "query_id long, rank int, id long, distance double"
+# a T4 merge whose candidate relation holds at most this many rows runs on
+# the driver (local_topk): 1M rows of (query_id, id, distance) are ~24 MB of
+# Arrow. Above it the merge stays distributed (topk_per_query) — a
+# MAX_QUERY_BATCH-sized batch must not land on the driver.
+LOCAL_MERGE_MAX_ROWS = 1 << 20
 
 
 def validate_topk(k: int) -> None:
@@ -153,18 +159,84 @@ def collect_query_matrix(
     reference, server/query_service.h:25-31; we allow far larger but they
     must fit on the driver — O(nq*d) doubles). Enforced by a limit(N+1)
     probe (same pattern as dedup.py's edge-count guard): a query side larger
-    than MAX_QUERY_BATCH raises instead of silently OOMing the driver."""
-    rows = queries.select(query_id_col, qvec_col).limit(MAX_QUERY_BATCH + 1).collect()
-    if len(rows) > MAX_QUERY_BATCH:
+    than MAX_QUERY_BATCH raises instead of silently OOMing the driver.
+
+    The batch comes back in ONE Arrow job (``toArrow``) and the matrix is a
+    flat-buffer reshape (``arrowkit.list_matrix``): a Row ``collect`` of a
+    limit runs as ``executeTake``, two jobs and two waves of Python tasks
+    for a Python-sourced batch, then rebuilds the matrix row by row. A
+    ragged or null query vector raises ``ValueError``."""
+    import pyarrow as pa
+
+    from ..functions import arrowkit as AK
+
+    tbl = (
+        queries.select(query_id_col, qvec_col)
+        .limit(MAX_QUERY_BATCH + 1)
+        .toArrow()
+    )
+    if tbl.num_rows > MAX_QUERY_BATCH:
         raise ValueError(
             f"query batch exceeds MAX_QUERY_BATCH={MAX_QUERY_BATCH}; the query "
             "side must be a bounded search batch, not a table — for "
             "corpus-vs-corpus searches use the join-based operators "
             "(ann.blocked_all_pairs / ann.lsh_near_dup_pairs)"
         )
-    qids = np.array([r[0] for r in rows], dtype=np.int64)
-    Q = np.array([r[1] for r in rows], dtype=np.float64)
-    return qids, Q
+    rb = pa.RecordBatch.from_arrays(
+        [c.combine_chunks() for c in tbl.columns], names=["query_id", "qvec"]
+    )
+    return AK.column(rb, "query_id", np.int64), AK.list_matrix(rb, "qvec")
+
+
+def merge_topk_arrays(
+    qids: np.ndarray, ids: np.ndarray, dist: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """The T4 merge of ``topk_per_query(dedup=True)`` over flat numpy
+    candidate columns: one row per (query, id) with its minimum distance,
+    ordered by (query, distance, id), rank 1..k per query. Returns
+    (query_id, rank, id, distance) in that order — the reference's
+    host-memory merge (engine/ivf_flat_index.cpp:493-504), vectorized
+    across every query of the batch."""
+    qids = np.asarray(qids, dtype=np.int64)
+    ids = np.asarray(ids, dtype=np.int64)
+    dist = np.asarray(dist, dtype=np.float64)
+    # min distance per (query, id): sort by (query, id, distance), keep
+    # the first row of each pair
+    o = np.lexsort((dist, ids, qids))
+    q, i, d = qids[o], ids[o], dist[o]
+    first = np.ones(len(q), dtype=bool)
+    first[1:] = (q[1:] != q[:-1]) | (i[1:] != i[:-1])
+    q, i, d = q[first], i[first], d[first]
+    o = np.lexsort((i, d, q))
+    q, i, d = q[o], i[o], d[o]
+    # rank = position within the query's run of rows
+    new = np.ones(len(q), dtype=bool)
+    new[1:] = q[1:] != q[:-1]
+    starts = np.flatnonzero(new)
+    rank = np.arange(len(q)) - np.repeat(starts, np.diff(np.r_[starts, len(q)])) + 1
+    keep = rank <= k
+    return q[keep], rank[keep].astype(np.int32), i[keep], d[keep]
+
+
+def local_topk(candidates: DataFrame, k: int) -> DataFrame:
+    """``topk_per_query(candidates, k, dedup=True)`` with the merge on the
+    driver: the candidates come back in one ``toArrow`` job, merge in
+    numpy (``merge_topk_arrays``) and return as a local DataFrame, which a
+    caller's ``collect`` answers without a job. For a candidate relation
+    whose row count is bounded by ``LOCAL_MERGE_MAX_ROWS``."""
+    import pyarrow as pa
+
+    tbl = candidates.select("query_id", "id", "distance").toArrow()
+    q, rank, i, d = merge_topk_arrays(
+        tbl.column("query_id").to_numpy(),
+        tbl.column("id").to_numpy(),
+        tbl.column("distance").to_numpy(),
+        k,
+    )
+    return candidates.sparkSession.createDataFrame(
+        pa.table({"query_id": q, "rank": rank, "id": i, "distance": d}),
+        RESULT_SCHEMA,
+    )
 
 
 def exact_rerank(
@@ -179,7 +251,22 @@ def exact_rerank(
 ) -> DataFrame:
     """T7 exact re-scoring (`rerank_exact`/`rerank_k`, proto/vdb.proto:22 —
     the flag applies to ANY index type): re-score a {query_id, id} shortlist
-    with exact distances and re-rank to k.
+    with exact distances (``exact_rescore``) and re-rank to k."""
+    rescored = exact_rescore(vectors, shortlist, qids, Q, metric, id_col, vec_col)
+    return topk_per_query(rescored, k, dedup=True)
+
+
+def exact_rescore(
+    vectors: DataFrame,
+    shortlist: DataFrame,
+    qids: np.ndarray,
+    Q: np.ndarray,
+    metric: str,
+    id_col: str = "id",
+    vec_col: str = "vector",
+) -> DataFrame:
+    """{query_id, id, distance}: the exact distance of every shortlisted
+    (query, id) pair, for a T4 merge to re-rank.
 
     The shortlist is O(nq * rerank_k) rows — broadcast it against the raw
     vectors so the corpus-side join is shuffle-free. Query ids map to rows
@@ -203,10 +290,9 @@ def exact_rerank(
                 distance=D.rowwise(metric, V, Q[qrows]),
             )
 
-    rescored = joined.select("query_id", id_col, vec_col).mapInArrow(
+    return joined.select("query_id", id_col, vec_col).mapInArrow(
         rescore, schema=CANDIDATE_SCHEMA
     )
-    return topk_per_query(rescored, k, dedup=True)
 
 
 def partial_topk_scanner(
@@ -543,9 +629,7 @@ def mmr_rerank(
             }
         )
 
-    return joined.groupBy("query_id").applyInPandas(
-        greedy, schema="query_id long, rank int, id long, distance double"
-    )
+    return joined.groupBy("query_id").applyInPandas(greedy, schema=RESULT_SCHEMA)
 
 
 def matryoshka_knn(

@@ -712,11 +712,16 @@ class VectorEngine:
         the serving-time dedup verb for RAG contexts. 1.0 = pure
         relevance (input order), lower = more diversity.
 
-        The result is materialized (eager localCheckpoint) before latency is
-        recorded so V7 percentiles measure submit-to-complete like the
-        reference (query_service.cpp:142-151), not just plan construction —
-        and the caller gets a computed result whose re-use costs no second
-        search.
+        The result is materialized before latency is recorded so V7
+        percentiles measure submit-to-complete like the reference
+        (query_service.cpp:142-151), not just plan construction — and the
+        caller gets a computed result whose re-use costs no second search.
+        A flat handle answers through ``IVFIndex.search_local``: when the
+        candidate bound fits ``knn.LOCAL_MERGE_MAX_ROWS`` the merge runs on
+        the driver and the result is a local DataFrame (``isLocal()``),
+        returned as is — the caller's ``collect`` runs no job. Any other
+        result (PQ/SQ/BQ handles, the SQ cascade, MMR, a merge above the
+        bound) is materialized with an eager ``localCheckpoint``.
 
         ``cascade`` (flat handles only, r8): "sq" routes through the
         SQ8-shortlist + exact-rerank cascade (requires the sidecar —
@@ -726,7 +731,8 @@ class VectorEngine:
         local storage at every probe shape (see the constant's rationale
         and when a remote-storage deployment should flip it)."""
         idx = self._loaded(index)
-        casc = {"cascade": cascade} if isinstance(idx, IVFIndex) else {}
+        flat = isinstance(idx, IVFIndex)
+        casc = {"cascade": cascade} if flat else {}
         t0 = time.perf_counter()
         if mmr_lambda is not None:
             from .operators import knn as _knn
@@ -760,9 +766,9 @@ class VectorEngine:
                 k=topk,
                 lam=mmr_lambda,
                 metric=metric or idx.manifest.metric,
-            ).localCheckpoint(eager=True)
+            )
         else:
-            result = idx.search(
+            result = (idx.search_local if flat else idx.search)(
                 queries,
                 k=topk,
                 nprobe=nprobe,
@@ -771,7 +777,9 @@ class VectorEngine:
                 rerank_k=rerank_k,
                 where=where,
                 **casc,
-            ).localCheckpoint(eager=True)
+            )
+        if not result.isLocal():
+            result = result.localCheckpoint(eager=True)
         self.metrics.record_search_latency(
             index, (time.perf_counter() - t0) * 1000.0
         )

@@ -1,17 +1,19 @@
 """Property-based tests (hypothesis) for the pure numpy/arrow kernels —
 no SparkSession, so these run in milliseconds and pin the kernel semantics
-that the distributed operators are built on."""
+that the distributed operators are built on. The one exception compares
+the driver-side T4 merge with the distributed one it stands in for."""
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from hypothesis.extra.numpy import arrays
 
 from cuda_acceleratedvectordatabaseengine_spark.functions import arrowkit as AK
 from cuda_acceleratedvectordatabaseengine_spark.functions import distance as D
+from cuda_acceleratedvectordatabaseengine_spark.operators import knn
 from cuda_acceleratedvectordatabaseengine_spark.streaming.topk_stream import _fold_topk
 
 # realistic embedding magnitudes: the L2 BLAS-expansion path trades ~1e-9
@@ -335,3 +337,67 @@ def test_topp_clamps_nprobe_above_k_internally():
     assert got.shape == ref.shape == (40, 5)
     assert got.max() < 5  # no sentinel index k leaked
     assert np.array_equal(ref, got)
+
+
+# adversarial T4 merge input: few ids and few distinct distances, so
+# duplicate (query, id) pairs with different distances and distance ties
+# are the common case; query ids without candidates and k above a
+# query's candidate count come for free
+merge_candidates = st.lists(
+    st.tuples(
+        st.integers(0, 3),  # query_id
+        st.integers(0, 6),  # id
+        st.sampled_from([0.0, 0.25, 1.0, 1.0, 2.5]) | st.floats(0, 4, width=32),
+    ),
+    max_size=40,
+)
+
+
+def _merge_reference(cands, k):
+    best: dict = {}
+    for q, i, d in cands:
+        best[(q, i)] = min(d, best.get((q, i), d))
+    out = []
+    for q in sorted({q for q, _ in best}):
+        ranked = sorted((d, i) for (qq, i), d in best.items() if qq == q)[:k]
+        out += [(q, r, i, d) for r, (d, i) in enumerate(ranked, 1)]
+    return out
+
+
+def _merge_arrays(cands, k):
+    q, rank, ids, d = knn.merge_topk_arrays(
+        np.array([c[0] for c in cands], dtype=np.int64),
+        np.array([c[1] for c in cands], dtype=np.int64),
+        np.array([c[2] for c in cands], dtype=np.float64),
+        k,
+    )
+    assert rank.dtype == np.int32
+    return list(zip(q.tolist(), rank.tolist(), ids.tolist(), d.tolist()))
+
+
+@given(merge_candidates, st.integers(1, 5))
+@example([], 3)  # an empty batch
+@example([(0, 1, 1.0), (0, 1, 0.5), (0, 2, 0.5), (1, 3, 1.0)], 1)
+@settings(max_examples=200, deadline=None)
+def test_merge_topk_arrays_matches_reference(cands, k):
+    """The numpy T4 merge: min distance per (query, id), (distance, id)
+    order, rank 1..k per query, short queries kept short."""
+    assert _merge_arrays(cands, k) == _merge_reference(cands, k)
+
+
+@given(st.lists(merge_candidates, min_size=1, max_size=6), st.integers(1, 5))
+@example([[]], 3)  # an empty batch
+@example([[(0, 1, 1.0), (0, 1, 0.5), (0, 2, 0.5), (1, 3, 1.0)]], 1)
+@settings(max_examples=6, deadline=None)
+def test_local_merge_equals_distributed_topk(spark, batches, k):
+    """knn.local_topk (one toArrow + numpy merge on the driver) returns
+    exactly the rows of knn.topk_per_query(dedup=True). Each example packs
+    several candidate sets under disjoint query ids, so one Spark merge
+    checks them all."""
+    cands = [(q + 4 * j, i, d) for j, b in enumerate(batches) for q, i, d in b]
+    df = spark.createDataFrame(cands, knn.CANDIDATE_SCHEMA)
+    local = knn.local_topk(df, k)
+    want = sorted(tuple(r) for r in knn.topk_per_query(df, k, dedup=True).collect())
+    assert local.isLocal()
+    assert sorted(tuple(r) for r in local.collect()) == want
+    assert _merge_arrays(cands, k) == want

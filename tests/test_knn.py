@@ -114,6 +114,29 @@ def test_query_batch_guard(spark, monkeypatch):
         knn.collect_query_matrix(big)
 
 
+
+@pytest.mark.parametrize(
+    "qvecs",
+    [
+        [[1.0, 2.0, 3.0], [4.0, 5.0, 6.0, 7.0, 8.0]],  # 8 values: a (2, 4) reshape
+        [[1.0, 2.0], None, [3.0, 4.0, 5.0, 6.0]],  # 6 values: a (3, 2) reshape
+        [[1.0, 2.0], [3.0]],
+    ],
+    ids=["ragged-divisible", "null-row", "ragged"],
+)
+def test_query_batch_rejects_ragged_and_null_vectors(spark, corpus, qvecs):
+    """The Arrow query handoff raises on a ragged or null query vector
+    instead of reshaping the flat values into wrong rows, as the Row
+    collect did by failing to build the matrix."""
+    qdf = spark.createDataFrame(
+        list(enumerate(qvecs)), "query_id long, qvec array<float>"
+    )
+    with pytest.raises(ValueError):
+        knn.collect_query_matrix(qdf)
+    with pytest.raises(ValueError):
+        knn.exact_knn(corpus[0], qdf, k=3)
+
+
 @pytest.fixture(scope="module")
 def labeled_corpus(spark, corpus):
     df, V = corpus

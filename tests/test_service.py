@@ -870,3 +870,56 @@ def test_merge_index_maintains_sidecars(spark, engine, tmp_root, sf_dir):
     idx = engine._loaded("m_cold_a")
     assert idx.manifest.sq  # merge tip carries codes
     assert idx.manifest.extra["storage_regime"] == "cold"
+
+
+def test_search_job_budget_on_delta_chain(
+    spark, engine, tmp_root, sf_dir, count_jobs, monkeypatch
+):
+    """An online request on a base + delta + tombstone chain runs in at
+    most 3 Spark jobs: the query batch (one Arrow job), the tombstone
+    broadcast and the one-wave scan whose per-task top-k merges on the
+    driver; the caller's collect runs none. Its rows equal the
+    distributed merge's (forced with LOCAL_MERGE_MAX_ROWS = 0), plain,
+    filtered and reranked."""
+    emb = tables.load(spark, sf_dir, "embeddings")
+    emb.filter(F.col("vec_id") < 300).select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
+    ).write.parquet(f"{tmp_root}/budget_src")
+    emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 360)).select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
+    ).write.parquet(f"{tmp_root}/budget_delta")
+    engine.create_index("budget", 64, metric="l2", nlist=8)
+    ep = engine.build_epoch("budget", f"{tmp_root}/budget_src", seed=5, max_iter=2)
+    engine.activate_epoch("budget", ep)
+    engine.load_index("budget")
+    engine.add_vectors("budget", f"{tmp_root}/budget_delta", activate=True)
+    deleted = [3, 11, 305, 310]
+    engine.delete_vectors("budget", deleted, activate=True)
+
+    picks = emb.filter(F.col("vec_id") < 360).orderBy("vec_id").limit(16).collect()
+    qdf = spark.createDataFrame(
+        [(i, list(r["embedding"])) for i, r in enumerate(picks)],
+        "query_id long, qvec array<float>",
+    )
+
+    def rows(**kw):
+        res = engine.search("budget", qdf, topk=10, nprobe=4, **kw)
+        return res, sorted(tuple(r) for r in res.collect())
+
+    # the first search on a fresh handle lists the chain's files; the
+    # budget is the steady state of a serving handle
+    rows()
+    for kw in ({}, {"where": "id % 3 = 0"}, {"rerank_exact": True, "rerank_k": 20}):
+        (res, local), n = count_jobs(lambda: rows(**kw))
+        assert len(local) == 16 * 10
+        assert not {r[2] for r in local} & set(deleted)
+        assert res.isLocal()
+        # the rerank joins the shortlist back to the pruned scan: the
+        # shortlist and tombstone broadcasts and the re-scoring scan are
+        # three more jobs
+        assert n["jobs"] <= (6 if "rerank_exact" in kw else 3), (kw, n)
+        with monkeypatch.context() as m:
+            m.setattr(knn, "LOCAL_MERGE_MAX_ROWS", 0)
+            dist, distributed = rows(**kw)
+        assert not dist.isLocal()
+        assert local == distributed, kw
