@@ -38,6 +38,7 @@ from ..sources.epochs import (
     fold_chain_codes,
     nearest_sidecar_epoch,
     prune_lists,
+    read_list_leg,
     sidecar_paths,
     write_list_partitioned,
 )
@@ -255,7 +256,7 @@ class CodeIndex:
         mgr = ivf_index.manager
         epoch = ivf_index.epoch
         src = (
-            ivf_index.spark.read.parquet(mgr.vectors_path(epoch))
+            read_list_leg(ivf_index.spark, mgr.vectors_path(epoch))
             if scope == "delta"
             else ivf_index.vectors
         )

@@ -7,6 +7,16 @@ partition coalescing), Arrow on (the pandas-UDF hot path moves columnar
 batches, the analog of the reference's Arrow IPC storage + dense GPU scans,
 format/storage.cpp:183-226), UTC session time so timestamp semantics match
 any SQL oracle.
+
+Python workers start from this package's ``daemon`` module
+(``spark.python.daemon.module``), which drops Spark's archives from the
+worker ``sys.path`` when the installed pyspark and py4j directories hold
+the same release (byte-identical ``version.py``) and a jar holds no Python
+at all; every task's ``importlib.invalidate_caches()`` then no longer
+re-reads them. Any other archive, or one it cannot read, stays on the
+path as Spark put it there. Workers find the module through their cwd and
+``PYTHONPATH``, so this package's parent directory is appended to
+``spark.executorEnv.PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -14,6 +24,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory that holds this package, for the workers' PYTHONPATH
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def default_driver_mem() -> str:
+    """The driver heap when ``$SPARK_GRAFT_DRIVER_MEM`` is unset:
+    ``min(8g, half of physical RAM)``, in MiB, so the pre-touched heap
+    never claims most of a small host."""
+    half_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
+    return f"{min(8 << 10, half_mib)}m"
 
 
 def get_spark(
@@ -37,7 +58,7 @@ def get_spark(
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") or cpus
     )
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
     # Pre-fault the whole heap at JVM start (-Xms = -Xmx + AlwaysPreTouch):
     # standard practice for dedicated Spark drivers/executors (fixed-size
     # heap, no uncommit/recommit churn). On this host it is load-bearing:
@@ -75,8 +96,13 @@ def get_spark(
         # events.parquet carries TIMESTAMP(NANOS) which Spark rejects by
         # default; read as long nanos, converted in sources.tables.load
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.daemon.module", f"{__package__}.daemon")
     )
     conf = dict(extra_conf or {})
+    user_path = conf.get("spark.executorEnv.PYTHONPATH", "")
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (user_path, _PACKAGE_ROOT) if p
+    )
     if pretouch:
         # merge with (not replace) any caller-supplied extraJavaOptions;
         # caller flags come last so they win on a conflicting -Xms. On

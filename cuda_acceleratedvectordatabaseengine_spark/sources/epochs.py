@@ -252,6 +252,44 @@ def normalize_list_layout(df: DataFrame, lpb: int | None) -> DataFrame:
     return df
 
 
+# the Spark schema its parquet writer stamps into every file footer
+_SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+TOMBSTONE_SCHEMA = "id long"
+
+
+def read_list_leg(spark: SparkSession, path: str) -> DataFrame:
+    """Read an inverted-list leg (``write_list_partitioned`` output) with
+    the schema its layout implies: the row schema Spark stamped in a file
+    footer, read on the driver, plus the int ``list_id`` / ``list_bucket``
+    partition column. A plain ``spark.read.parquet`` would first run a
+    one-task schema-inference job per leg, on every freshly loaded chain.
+    A leg without such a footer is read with inference."""
+    import pyarrow.parquet as papq
+    from pyspark.sql import types as T
+
+    def listing(d):
+        return sorted(os.scandir(d), key=lambda e: e.name)
+
+    top = listing(path)
+    part = next((
+        e for e in top
+        if e.is_dir() and e.name.partition("=")[0] in ("list_id", "list_bucket")
+    ), None)
+    files = [
+        e.path for e in (top if part is None else listing(part.path))
+        if e.is_file() and e.name.endswith(".parquet")
+        and not e.name.startswith(("_", "."))
+    ]
+    meta = papq.read_schema(files[0]).metadata if files else None
+    raw = (meta or {}).get(_SPARK_ROW_SCHEMA_KEY)
+    if raw is None:
+        return spark.read.parquet(path)
+    schema = T.StructType.fromJson(json.loads(raw))
+    if part is not None:
+        schema = schema.add(part.name.partition("=")[0], T.IntegerType())
+    return spark.read.schema(schema).parquet(path)
+
+
 PACKED_F32 = "packed_f32"
 
 
@@ -796,11 +834,13 @@ class EpochManager:
         for e in self.epoch_chain(epoch):
             man = self.read_manifest(e)
             if man.num_tombstones > 0 and out is not None:
-                ts = spark.read.parquet(self.tombstones_path(e)).select("id")
+                ts = spark.read.schema(TOMBSTONE_SCHEMA).parquet(
+                    self.tombstones_path(e)
+                )
                 out = out.join(ts, "id", "left_anti")
             vpath = self.vectors_path(e)
             if os.path.isdir(vpath):
-                leg = normalize_list_layout(spark.read.parquet(vpath), lpb)
+                leg = normalize_list_layout(read_list_leg(spark, vpath), lpb)
                 # no-op when the leg already matches the chain layout
                 # (write_epoch inherits the parent layout, so mismatches
                 # only arise from explicit overrides). A converted leg
@@ -876,10 +916,10 @@ def fold_chain_codes(
     for e in chain[start:]:
         man = manifests[e]
         if man.num_tombstones > 0 and out is not None:
-            ts = spark.read.parquet(mgr.tombstones_path(e)).select("id")
+            ts = spark.read.schema(TOMBSTONE_SCHEMA).parquet(mgr.tombstones_path(e))
             out = out.join(ts, "id", "left_anti")
         if getattr(man, kind):
-            leg = normalize_list_layout(spark.read.parquet(path_fn(e)), lpb)
+            leg = normalize_list_layout(read_list_leg(spark, path_fn(e)), lpb)
             out = leg if out is None else out.unionByName(leg)
         elif man.num_tombstones == 0:
             raise ValueError(

@@ -923,3 +923,48 @@ def test_search_job_budget_on_delta_chain(
             dist, distributed = rows(**kw)
         assert not dist.isLocal()
         assert local == distributed, kw
+
+
+def test_first_search_after_activation_runs_no_schema_job(
+    spark, engine, tmp_root, sf_dir, count_jobs
+):
+    """The first request after each activation (a base, then base +
+    delta, then base + delta + tombstones) runs at most the 3 jobs of a
+    warm request: every chain leg is read with the schema its layout
+    implies, so none pays Spark's one-task parquet schema-inference job.
+    Its rows equal a warm repeat's."""
+    emb = tables.load(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
+    )
+    emb.filter(F.col("id") < 300).write.parquet(f"{tmp_root}/fresh_src")
+    emb.filter((F.col("id") >= 300) & (F.col("id") < 360)).write.parquet(
+        f"{tmp_root}/fresh_delta"
+    )
+    picks = emb.filter(F.col("id") < 360).orderBy("id").limit(16).collect()
+    qdf = spark.createDataFrame(
+        [(i, list(r["vector"])) for i, r in enumerate(picks)],
+        "query_id long, qvec array<float>",
+    )
+
+    def search():
+        return sorted(
+            tuple(r) for r in engine.search("fresh", qdf, topk=10, nprobe=4).collect()
+        )
+
+    def first_request_budget():
+        first, n = count_jobs(search)
+        assert n["jobs"] <= 3, n
+        assert len(first) == 16 * 10
+        assert first == search()
+        return first
+
+    engine.create_index("fresh", 64, metric="l2", nlist=8)
+    ep = engine.build_epoch("fresh", f"{tmp_root}/fresh_src", seed=5, max_iter=2)
+    engine.activate_epoch("fresh", ep)
+    engine.load_index("fresh")
+    first_request_budget()
+    engine.add_vectors("fresh", f"{tmp_root}/fresh_delta", activate=True)
+    assert {r[2] for r in first_request_budget()} & set(range(300, 360))
+    deleted = [3, 11, 305, 310]
+    engine.delete_vectors("fresh", deleted, activate=True)
+    assert not {r[2] for r in first_request_budget()} & set(deleted)
