@@ -313,13 +313,10 @@ def batch(**cols) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(arrays, names=list(cols.keys()))
 
 
-def topk_columns(
-    dmat: np.ndarray, ids: np.ndarray, k: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Per-column (query) top-k of a (n, nq) distance matrix, vectorized
-    across ALL queries at once (no per-query Python loop).
-
-    Returns (col_index, id, distance) flat arrays of length nq*kk —
+def topk_rows(dmat: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Per-column (query) top-k of a (n, nq) distance matrix as flat
+    (col_index, row_index) arrays of length nq*kk, column-major,
+    vectorized across ALL queries at once (no per-query Python loop):
     np.argpartition along axis 0 is the batched std::partial_sort
     (ivf_flat_index.cpp:367-371)."""
     n, nq = dmat.shape
@@ -329,6 +326,12 @@ def topk_columns(
     else:
         sel = np.broadcast_to(np.arange(n)[:, None], (n, nq))
     qcol = np.broadcast_to(np.arange(nq, dtype=np.int64), (kk, nq)).ravel(order="F")
-    flat_ids = ids[sel].ravel(order="F")
-    flat_d = np.take_along_axis(dmat, sel, axis=0).ravel(order="F")
-    return qcol, flat_ids, flat_d
+    return qcol, sel.ravel(order="F")
+
+
+def topk_columns(
+    dmat: np.ndarray, ids: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``topk_rows`` as (col_index, id, distance) flat arrays."""
+    qcol, rows = topk_rows(dmat, k)
+    return qcol, ids[rows], dmat[rows, qcol]

@@ -154,21 +154,29 @@ def register_sql_functions(spark) -> None:
 # processes (spark.python.worker.reuse=true default) and each process runs
 # one task at a time, so a process-global pool is race-free; the PID guard
 # resets it in a freshly-forked worker so no buffer is ever shared COW with
-# a parent. Buffer contents are fully overwritten by every pairwise() call
-# (bit-identical results, same contract as the per-task ws). Motivation:
-# on slow-first-touch hosts (OPTIMIZATION_r14.md) a per-task ws re-faults
-# its score blocks on every task of every search job; the pool pays that
-# once per worker process. Retained memory equals the previous PEAK
-# concurrent usage (every worker already held these blocks live during a
-# scan), so executor memory sizing is unchanged.
+# a parent. A driver that runs a scan kernel itself (the IVF list tier)
+# may do so from several request threads at once: any thread but the main
+# one gets a pool of its own. Buffer contents are fully overwritten by
+# every pairwise() call (bit-identical results, same contract as the
+# per-task ws). Motivation: on slow-first-touch hosts (OPTIMIZATION_r14.md)
+# a per-task ws re-faults its score blocks on every task of every search
+# job; the pool pays that once per worker process. Retained memory equals
+# the previous PEAK concurrent usage (every worker already held these
+# blocks live during a scan), so executor memory sizing is unchanged.
 import os as _os
+import threading as _threading
 
 _TASK_WS: dict = {}
 _TASK_WS_PID: "int | None" = None
+_THREAD_WS = _threading.local()
 
 
 def task_workspace() -> dict:
     global _TASK_WS, _TASK_WS_PID
+    if _threading.current_thread() is not _threading.main_thread():
+        if not hasattr(_THREAD_WS, "ws"):
+            _THREAD_WS.ws = {}
+        return _THREAD_WS.ws
     pid = _os.getpid()
     if _TASK_WS_PID != pid:
         _TASK_WS = {}

@@ -26,6 +26,8 @@ ivf_flat_index.cpp:232-233); nprobe defaults to 8
 
 from __future__ import annotations
 
+import functools
+import threading
 from collections.abc import Iterator
 from dataclasses import dataclass, field
 
@@ -33,6 +35,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import session
 from ..functions import distance as D
 from ..sources.epochs import EpochManager, Manifest, prune_lists
 from . import kmeans as KM
@@ -491,7 +494,10 @@ def _list_scanner(
     deduplicated by id (minimum distance) with ties broken by id
     (``knn.merge_topk_arrays``). The merge downstream then reads at most
     tasks x nq x k candidate rows, however many batches and lists a task
-    scanned.
+    scanned. A candidate's distance is its exact direct-form distance
+    (``exact_topk``), so rows do not depend on how the lists were cut
+    into batches and tasks. The driver-resident list tier runs this same
+    closure over its blocks (``ProbedScan.merge_resident``).
 
     Query-locality fusion (cost-gated, default effectively work-neutral
     — see ``FUSE_INFLATION_CAP`` for the measured rationale): when a
@@ -520,6 +526,20 @@ def _list_scanner(
     # held candidate rows are merged down to <= nq*k once they pass this
     compact_at = max(2 * len(qids) * k, 1 << 16)
 
+    def exact_topk(Vs, sub_ids, qset, dmat):
+        """A block's per-query top-k, each candidate reported with its
+        direct-form distance (``D.rowwise``): the block's GEMM only ranks.
+        A GEMM's rounding depends on the block's shape, so this keeps a
+        candidate's distance, and the rows of any merge, independent of
+        which rows shared its block (one Spark task's batch, a chain leg,
+        a compacted list, a driver-resident block). k is clipped to the
+        candidate count (ivf_flat_index.cpp:232-233); +inf masked pairs
+        drop out."""
+        qcol, row = AK.topk_rows(dmat, k)
+        keep = np.isfinite(dmat[row, qcol])
+        qi, row = qset[qcol[keep]], row[keep]
+        return qids[qi], sub_ids[row], D.rowwise(metric, Vs[row], Q[qi])
+
     def batch_candidates(rb, ws):
         """(query_id, id, distance) arrays of one batch's per-list top-k."""
         ids = AK.column(rb, "id", np.int64)
@@ -544,25 +564,21 @@ def _list_scanner(
         if flops_fused <= fuse_cap * flops_exact:
             # one GEMM over the batch's probed rows x the query union,
             # non-probed (list, query) pairs masked out of the top-k
-            sub_ids = ids[rmask]
-            dmat = D.pairwise(metric, V[rmask], Q[q_union], ws=ws)
+            Vs = V[rmask]
+            dmat = D.pairwise(metric, Vs, Q[q_union], ws=ws)
             if len(pidx) > 1:
                 pos = {int(q): j for j, q in enumerate(q_union)}
                 P = np.zeros((len(ul), len(q_union)), dtype=bool)
                 for i in pidx:
                     P[i, [pos[int(q)] for q in qsets[i]]] = True
                 dmat[~P[inv[rmask]]] = np.inf
-            # k clipped to candidate count (ivf_flat_index.cpp:232-233)
-            qcol, flat_ids, flat_d = AK.topk_columns(dmat, sub_ids, k)
-            keep = np.isfinite(flat_d)
-            yield qids[q_union[qcol[keep]]], flat_ids[keep], flat_d[keep]
+            yield exact_topk(Vs, ids[rmask], q_union, dmat)
             return
         for i in pidx:
-            qidx = qsets[i]
             mask = inv == i
-            dmat = D.pairwise(metric, V[mask], Q[qidx], ws=ws)  # (n, nq_sub)
-            qcol, flat_ids, flat_d = AK.topk_columns(dmat, ids[mask], k)
-            yield qids[qidx][qcol], flat_ids, flat_d
+            Vs = V[mask]
+            dmat = D.pairwise(metric, Vs, Q[qsets[i]], ws=ws)  # (n, nq_sub)
+            yield exact_topk(Vs, ids[mask], qsets[i], dmat)
 
     def merged(parts):
         q, _rank, i, d = knn.merge_topk_arrays(
@@ -697,17 +713,22 @@ def _range_list_scanner(
 
 @dataclass
 class ProbedScan:
-    """A flat search up to its T4 merge: ``cand`` holds one top-``fetch_k``
-    per query per scan task (``_list_scanner``), so it has at most
-    ``max_candidates`` rows — a list's rows can sit in several tasks (a
-    delta chain's legs, split files), so the bound counts tasks, not
-    probed lists. ``merge`` finishes the search with either T4 merge
-    (``knn.topk_per_query`` or ``knn.local_topk``)."""
+    """A flat search up to its T4 merge: the query batch, its probe and
+    the scan's parameters. Either the pruned Spark scan finishes it
+    (``merge``), or driver-resident list blocks do (``merge_resident``);
+    both run the one ``_list_scanner`` kernel.
 
-    cand: DataFrame
-    pruned: DataFrame  # the probe-pruned scan, the rerank join-back source
+    On Spark, the scan emits one top-``fetch_k`` per query per scan task,
+    so at most ``max_candidates`` rows — a list's rows can sit in several
+    tasks (a delta chain's legs, split files), so the bound counts tasks,
+    not probed lists. The Spark plan is built on first use only."""
+
+    source: DataFrame  # the chain's live {id, vector, list_id} relation
+    lpb: "int | None"
+    where: "str | Column | None"
     qids: np.ndarray
     Q: np.ndarray
+    probe: np.ndarray  # (nq, nprobe) list ids
     k: int
     fetch_k: int
     metric: str
@@ -715,15 +736,36 @@ class ProbedScan:
     scan_tasks: int
 
     @property
+    def lists(self) -> "list[int]":
+        return sorted({int(x) for x in self.probe.ravel()})
+
+    @property
     def max_candidates(self) -> int:
         return len(self.qids) * self.scan_tasks * self.fetch_k
+
+    @functools.cached_property
+    def pruned(self) -> DataFrame:
+        """The probe-pruned scan, also the rerank join-back source."""
+        pruned = prune_lists(self.source, self.lists, self.lpb)
+        if self.where is not None:
+            pruned = pruned.filter(self.where)
+        # one wave of Python tasks: a delta chain's base and delta legs
+        # (and a list's split files) share tasks instead of queueing a
+        # second wave behind the first
+        return pruned.coalesce(self.scan_tasks)
+
+    def scanner(self):
+        return _list_scanner(self.qids, self.Q, self.probe, self.fetch_k, self.metric)
 
     def merge(self, topk) -> DataFrame:
         # dedup-by-id merge (T4): ids are unique per list, but the reference
         # dedups on merge regardless (ivf_flat_index.cpp:493-504)
+        cand = self.pruned.select("id", "vector", "list_id").mapInArrow(
+            self.scanner(), schema=knn.CANDIDATE_SCHEMA
+        )
         if not self.rerank_exact:
-            return topk(self.cand, self.k)
-        shortlist = topk(self.cand, self.fetch_k).select("query_id", "id")
+            return topk(cand, self.k)
+        shortlist = topk(cand, self.fetch_k).select("query_id", "id")
         # rerank source = the SAME pruned scan: every shortlist candidate
         # lives in a probed list by construction, so joining back against
         # the full chain would read nlist/nprobe x more partitions for
@@ -732,6 +774,37 @@ class ProbedScan:
             self.pruned, shortlist, self.qids, self.Q, self.metric
         )
         return topk(rescored, self.k)
+
+    def merge_resident(self, spark: SparkSession, blocks: list) -> DataFrame:
+        """``merge(knn.local_topk)`` over the probed lists' driver-resident
+        ``{id, vector, list_id}`` blocks, with no Spark job: the blocks run
+        through the scan kernel as one task's batches, and a rerank
+        re-scores its shortlist against the same rows, as ``exact_rescore``
+        does against the pruned scan."""
+        from ..functions import arrowkit as AK
+
+        out = next(self.scanner()(iter(blocks)), None)
+        cols = [("query_id", np.int64), ("id", np.int64), ("distance", np.float64)]
+        q, i, d = (
+            [np.empty(0, t) for _, t in cols]
+            if out is None
+            else [AK.column(out, c, t) for c, t in cols]
+        )
+        if self.rerank_exact and len(q):
+            import pyarrow as pa
+
+            q, _rank, i, _d = knn.merge_topk_arrays(q, i, d, self.fetch_k)
+            # the shortlist joined to every probed row with its id
+            ids = np.concatenate([AK.column(b, "id", np.int64) for b in blocks])
+            hit = pa.table({"query_id": q, "id": i}).join(
+                pa.table({"id": ids, "row": np.arange(len(ids))}), "id"
+            )
+            q, i, rows = (hit[c].to_numpy() for c in ("query_id", "id", "row"))
+            V = np.concatenate([AK.list_matrix(b, "vector") for b in blocks])
+            qsort = np.argsort(self.qids)
+            qrows = qsort[np.searchsorted(self.qids[qsort], q)]
+            d = D.rowwise(self.metric, V[rows], self.Q[qrows])
+        return knn.result_frame(spark, *knn.merge_topk_arrays(q, i, d, self.k))
 
 
 @dataclass
@@ -788,6 +861,20 @@ class IVFIndex:
     # refresh_sidecars() / reload, never by a surprise mid-process flip
     _sq_cascade: "object" = None
     _sq_cascade_checked: bool = False
+    # driver-resident list tier (the reference answers a probed search from
+    # lists held in memory, engine/ivf_flat_index.cpp:205-256, behind an
+    # LFU list cache, ivf_flat_index.h:55-67,191-222): list_id -> the
+    # list's LIVE {id, vector, list_id} rows as one Arrow batch, read from
+    # the folded chain, so tombstones are already applied. Epochs are
+    # immutable and every activation loads a new handle, so a block never
+    # goes stale. Bounded by ``tier_budget_bytes``; LFU eviction by
+    # access_count; fills serialize on the lock (run_search_batch submits
+    # from threads).
+    _tier: dict = field(default_factory=dict, repr=False)
+    _tier_bytes: int = 0
+    _tier_lock: threading.Lock = field(
+        default_factory=threading.Lock, repr=False, compare=False
+    )
 
     @property
     def vectors(self) -> DataFrame:
@@ -1102,22 +1189,34 @@ class IVFIndex:
         return scan.merge(knn.topk_per_query)
 
     def search_local(self, queries: DataFrame, k: int, **kw) -> DataFrame:
-        """``search`` (same arguments), executed now with the T4 merge on
+        """``search`` (same arguments), executed now, with the T4 merge on
         the driver whenever the candidate relation is bounded by
-        ``knn.LOCAL_MERGE_MAX_ROWS``: the per-task top-k candidates come
-        back in one ``toArrow`` job and merge in numpy, as the reference
-        merges per-list results in host memory
-        (engine/ivf_flat_index.cpp:493-504). The result is then a local
-        DataFrame (``isLocal()``) whose ``collect`` runs no job. Above
-        the bound (a large query batch times k), and on the SQ cascade,
-        the lazy ``search`` plan is returned. ``rerank_exact`` merges both
-        its shortlist and the re-scored rows on the driver."""
+        ``knn.LOCAL_MERGE_MAX_ROWS``. The result is then a local DataFrame
+        (``isLocal()``) whose ``collect`` runs no job.
+
+        Within that bound an unfiltered request is answered from the
+        driver-resident list tier: the probed lists missing from it come
+        back in one ``toArrow`` job (none when all are resident), and
+        ``_list_scanner`` plus the numpy merge run over the blocks on the
+        driver, as the reference scans lists held in memory
+        (engine/ivf_flat_index.cpp:205-256). A warm request so runs one
+        Spark job, the query batch's. When the probed lists do not fit
+        ``tier_budget_bytes``, or the request has a ``where=``, the pruned
+        Spark scan runs with its per-task top-k and the candidates merge
+        on the driver (``knn.local_topk``). Above the bound (a large query
+        batch times k), and on the SQ cascade, the lazy ``search`` plan is
+        returned. ``rerank_exact`` re-scores its shortlist on the same
+        path that scanned it."""
         scan = self._probed_scan(queries, k, **kw)
         if isinstance(scan, DataFrame):
             return scan
-        if scan.max_candidates <= knn.LOCAL_MERGE_MAX_ROWS:
-            return scan.merge(knn.local_topk)
-        return scan.merge(knn.topk_per_query)
+        if scan.max_candidates > knn.LOCAL_MERGE_MAX_ROWS:
+            return scan.merge(knn.topk_per_query)
+        if scan.where is None:
+            blocks = self._resident_lists(scan.lists)
+            if blocks is not None:
+                return scan.merge_resident(self.spark, blocks)
+        return scan.merge(knn.local_topk)
 
     def _probed_scan(
         self,
@@ -1133,8 +1232,8 @@ class IVFIndex:
         cascade: str = "auto",
     ) -> "ProbedScan | DataFrame":
         """Everything of a search up to its T4 merge: validation, the
-        query batch, the probe and the pruned per-task top-k scan — or the
-        finished result when the SQ cascade takes the request."""
+        query batch and the probe — or the finished result when the SQ
+        cascade takes the request."""
         knn.validate_topk(k)
         nprobe = self.resolved_nprobe(nprobe)
         metric = D.parse_metric(metric or self.manifest.metric)
@@ -1175,20 +1274,80 @@ class IVFIndex:
                     where=where,
                 )
         fetch_k = max(k, rerank_k or 0) if rerank_exact else k
-        needed = sorted({int(x) for x in probe.ravel()})
-        pruned = prune_lists(self.vectors, needed, self.lists_per_bucket)
-        if where is not None:
-            pruned = pruned.filter(where)
-        # one wave of Python tasks: a delta chain's base and delta legs
-        # (and a list's split files) share tasks instead of queueing a
-        # second wave behind the first
-        tasks = self.spark.sparkContext.defaultParallelism
-        pruned = pruned.coalesce(tasks)
-        cand = pruned.select("id", "vector", "list_id").mapInArrow(
-            _list_scanner(qids, Q, probe, fetch_k, metric), schema=knn.CANDIDATE_SCHEMA
+        return ProbedScan(
+            self.vectors, self.lists_per_bucket, where, qids, Q, probe, k,
+            fetch_k, metric, rerank_exact,
+            self.spark.sparkContext.defaultParallelism,
         )
-        return ProbedScan(cand, pruned, qids, Q, k, fetch_k, metric,
-                          rerank_exact, tasks)
+
+    # -- driver-resident list tier -----------------------------------------
+    def _row_bytes(self) -> int:
+        """Estimated bytes of one {id, vector, list_id} row held warm: id(8)
+        + float32 vector + list_id(4) + per-row overhead — an upper-ish
+        bound, the safe direction for a budget."""
+        return 8 + 4 * self.manifest.dimension + 4 + 16
+
+    def tier_budget_bytes(self) -> int:
+        """The list tier's capacity: a sixteenth of the host's physical RAM
+        (``session.host_ram_bytes``), capped further by
+        ``warm_budget_bytes`` when one is set."""
+        host = session.host_ram_bytes() // 16
+        if self.warm_budget_bytes is None:
+            return host
+        return min(host, self.warm_budget_bytes)
+
+    def _resident_lists(self, lists: "list[int]") -> "list | None":
+        """The non-empty blocks of ``lists`` from the tier, after filling
+        the missing ones in one ``toArrow`` job over the folded chain —
+        or None, with nothing read, when the lists would not fit the
+        budget (estimated at the mean list size for the missing ones)."""
+        budget = self.tier_budget_bytes()
+        with self._tier_lock:
+            missing = [lid for lid in lists if lid not in self._tier]
+            held = sum(self._tier[lid].nbytes for lid in lists if lid in self._tier)
+            est = (
+                self.manifest.num_vectors * len(missing)
+                // max(1, self.manifest.nlist) * self._row_bytes()
+            )
+            if held + est > budget:
+                return None
+            if missing:
+                self._fill_tier(missing)
+            blocks = [self._tier[lid] for lid in lists]
+            self._trim_tier(budget, keep=set(lists))
+        return [b for b in blocks if b.num_rows]
+
+    def _fill_tier(self, lists: "list[int]") -> None:
+        """Read ``lists`` from the folded chain in one ``toArrow`` job and
+        hold each as its own batch (its own buffers, so evicting one list
+        frees it). A list with no live row is held empty, so it is not
+        read again."""
+        import pyarrow as pa
+
+        tbl = (
+            prune_lists(self.vectors, lists, self.lists_per_bucket)
+            .select("id", "vector", "list_id")
+            .toArrow()
+        )
+        lids = tbl.column("list_id").to_numpy()
+        order = np.argsort(lids, kind="stable")
+        bounds = np.searchsorted(lids[order], [(l, l + 1) for l in lists])
+        for lid, (lo, hi) in zip(lists, bounds):
+            part = tbl.take(pa.array(order[lo:hi])).combine_chunks()
+            rb = part.to_batches()
+            rb = rb[0] if rb else pa.RecordBatch.from_pylist([], schema=tbl.schema)
+            self._tier[lid] = rb
+            self._tier_bytes += rb.nbytes
+
+    def _trim_tier(self, budget: int, keep=frozenset()) -> None:
+        """Evict the coldest blocks (lowest access_count, then the oldest
+        fill) until the tier fits ``budget``; lists in ``keep`` go last."""
+        while self._tier and self._tier_bytes > budget:
+            coldest = min(
+                self._tier,
+                key=lambda lid: (lid in keep, self.access_count.get(lid, 0)),
+            )
+            self._tier_bytes -= self._tier.pop(coldest).nbytes
 
     def list_radii(self) -> np.ndarray:
         """Per-list covering radius: the max Euclidean distance from any
@@ -1499,9 +1658,7 @@ class IVFIndex:
         df = df.cache()
         n = df.count()
         self._warm[key] = df
-        # row estimate: id(8) + float32 vector + list_id(4) + per-row object
-        # overhead — an upper-ish bound is the safe direction for a budget
-        self._warm_bytes[key] = n * (8 + 4 * self.manifest.dimension + 4 + 16)
+        self._warm_bytes[key] = n * self._row_bytes()
         self.last_warmup_evicted = key in self.enforce_warm_budget()
         return df
 
@@ -1534,9 +1691,12 @@ class IVFIndex:
         return sum(self.access_count.get(lid, 0) for lid in key)
 
     def set_warm_budget(self, budget_bytes: int | None) -> list:
-        """Set (or clear) the warm-cache capacity and enforce it now.
-        Returns the evicted set keys."""
+        """Set (or clear) the warm-cache capacity and enforce it now, on
+        the Spark warm sets and the list tier alike. Returns the evicted
+        warm-set keys."""
         self.warm_budget_bytes = budget_bytes
+        with self._tier_lock:
+            self._trim_tier(self.tier_budget_bytes())
         return self.enforce_warm_budget()
 
     def enforce_warm_budget(self) -> list:

@@ -224,16 +224,25 @@ def local_topk(candidates: DataFrame, k: int) -> DataFrame:
     numpy (``merge_topk_arrays``) and return as a local DataFrame, which a
     caller's ``collect`` answers without a job. For a candidate relation
     whose row count is bounded by ``LOCAL_MERGE_MAX_ROWS``."""
+    tbl = candidates.select("query_id", "id", "distance").toArrow()
+    return result_frame(
+        candidates.sparkSession,
+        *merge_topk_arrays(
+            tbl.column("query_id").to_numpy(),
+            tbl.column("id").to_numpy(),
+            tbl.column("distance").to_numpy(),
+            k,
+        ),
+    )
+
+
+def result_frame(spark, q, rank, i, d) -> DataFrame:
+    """A local ``RESULT_SCHEMA`` DataFrame of merged (query_id, rank, id,
+    distance) arrays, built from Arrow: ``isLocal()``, so its ``collect``
+    runs no job."""
     import pyarrow as pa
 
-    tbl = candidates.select("query_id", "id", "distance").toArrow()
-    q, rank, i, d = merge_topk_arrays(
-        tbl.column("query_id").to_numpy(),
-        tbl.column("id").to_numpy(),
-        tbl.column("distance").to_numpy(),
-        k,
-    )
-    return candidates.sparkSession.createDataFrame(
+    return spark.createDataFrame(
         pa.table({"query_id": q, "rank": rank, "id": i, "distance": d}),
         RESULT_SCHEMA,
     )

@@ -719,9 +719,13 @@ class VectorEngine:
         A flat handle answers through ``IVFIndex.search_local``: when the
         candidate bound fits ``knn.LOCAL_MERGE_MAX_ROWS`` the merge runs on
         the driver and the result is a local DataFrame (``isLocal()``),
-        returned as is — the caller's ``collect`` runs no job. Any other
-        result (PQ/SQ/BQ handles, the SQ cascade, MMR, a merge above the
-        bound) is materialized with an eager ``localCheckpoint``.
+        returned as is — the caller's ``collect`` runs no job. An
+        unfiltered request within that bound scans the handle's
+        driver-resident list tier: once its probed lists are held there
+        (the first request to probe a list reads it in), the request runs
+        one Spark job, the query batch's. Any other result (PQ/SQ/BQ
+        handles, the SQ cascade, MMR, a merge above the bound) is
+        materialized with an eager ``localCheckpoint``.
 
         ``cascade`` (flat handles only, r8): "sq" routes through the
         SQ8-shortlist + exact-rerank cascade (requires the sidecar —

@@ -22,19 +22,70 @@ path as Spark put it there. Workers find the module through their cwd and
 from __future__ import annotations
 
 import os
+import re
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # the directory that holds this package, for the workers' PYTHONPATH
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def default_driver_mem() -> str:
+def host_ram_bytes() -> int:
+    """Physical RAM of this host."""
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def mem_available_bytes(meminfo: str | None = None) -> int:
+    """Memory a new process can take without swapping: the kernel's
+    ``MemAvailable`` estimate from ``meminfo`` (the text of
+    ``/proc/meminfo``, read when None). It already counts what other
+    processes, a second Spark driver among them, hold. Where there is no
+    such figure (a non-Linux host), physical RAM."""
+    if meminfo is None:
+        try:
+            with open("/proc/meminfo") as f:
+                meminfo = f.read()
+        except OSError:
+            return host_ram_bytes()
+    for line in meminfo.splitlines():
+        if line.startswith("MemAvailable:"):
+            return int(line.split()[1]) * 1024
+    return host_ram_bytes()
+
+
+def default_driver_mem(meminfo: str | None = None) -> str:
     """The driver heap when ``$SPARK_GRAFT_DRIVER_MEM`` is unset:
-    ``min(8g, half of physical RAM)``, in MiB, so the pre-touched heap
-    never claims most of a small host."""
-    half_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
+    ``min(8g, half of available memory)``, in MiB. Sized against what is
+    free rather than physical RAM, so a second session started beside a
+    running one takes half of what is left, not half of the host."""
+    half_mib = mem_available_bytes(meminfo) // (2 << 20)
     return f"{min(8 << 10, half_mib)}m"
+
+
+def heap_bytes(mem: str) -> int:
+    """Bytes of a JVM memory string (``512m``, ``8g``, ``7680``); a bare
+    number is MiB, as ``spark.driver.memory`` reads it."""
+    m = re.fullmatch(r"\s*(\d+)\s*([kmgt]?)b?\s*", mem.lower())
+    if m is None:
+        raise ValueError(f"unreadable heap size {mem!r}")
+    shift = {"k": 10, "": 20, "m": 20, "g": 30, "t": 40}[m.group(2)]
+    return int(m.group(1)) << shift
+
+
+def check_heap_fits(mem: str, meminfo: str | None = None) -> None:
+    """Raise before a JVM starts when a pre-touched heap of ``mem`` is more
+    than the host has available: the JVM would commit all of it at start,
+    and the kernel's OOM killer, not this call, would then pick which
+    process dies, possibly another session's JVM."""
+    need, avail = heap_bytes(mem), mem_available_bytes(meminfo)
+    if need > avail:
+        raise RuntimeError(
+            f"the pre-touched driver heap of {mem} ({need >> 20} MiB) does "
+            f"not fit in the {avail >> 20} MiB this host has available; "
+            "set SPARK_GRAFT_DRIVER_MEM to a smaller heap, or "
+            "SPARK_GRAFT_PRETOUCH=0 to grow it on demand"
+        )
 
 
 def get_spark(
@@ -98,6 +149,9 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.python.daemon.module", f"{__package__}.daemon")
     )
+    if pretouch and SparkContext._active_spark_context is None:
+        # only a new JVM commits a heap; getOrCreate reuses a live one
+        check_heap_fits(mem)
     conf = dict(extra_conf or {})
     user_path = conf.get("spark.executorEnv.PYTHONPATH", "")
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(

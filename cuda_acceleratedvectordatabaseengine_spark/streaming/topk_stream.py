@@ -20,6 +20,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -121,8 +122,13 @@ def score_stream_against_queries(
     pandas {query_id, qvec}), emitting {query_id, id, distance} candidates.
     The query matrix ships to executors once (closure broadcast) — the
     streaming analog of T1's query-batch flattening."""
+    from ..functions import arrowkit as AK
+
     qids = queries_pdf["query_id"].to_numpy(np.int64)
-    Q = np.array([np.asarray(v) for v in queries_pdf["qvec"]], dtype=np.float64)
+    Q = AK.list_matrix(
+        pa.RecordBatch.from_pandas(queries_pdf[["qvec"]], preserve_index=False),
+        "qvec",
+    )
     metric = D.parse_metric(metric)
 
     out_schema = T.StructType(

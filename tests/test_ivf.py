@@ -326,6 +326,44 @@ def test_search_batch_concurrent_groups_match_serial(spark, index, emb_corpus):
     assert spark.sparkContext.getLocalProperty("spark.scheduler.pool") is None
 
 
+def test_list_tier_concurrent_fills_match_the_lazy_plan(spark, index, emb_corpus):
+    """Groups submitted from more threads than cores onto a fresh handle
+    fill its list tier under one lock and score on the driver with
+    per-thread workspaces: every group's rows, distances included, equal
+    the lazy ``search`` plan's, the tier holds every probed list once, and
+    its byte count matches its blocks (a lost update would break it)."""
+    import sys
+
+    fresh = ivf.IVFIndex.load(
+        spark, index.manager.base_dir, index.manager.index_name
+    )
+    vecs = {r["id"]: r["vector"] for r in emb_corpus.limit(32).collect()}
+    reqs = [
+        ivf.SearchRequest(query_id=qid, qvec=v, k=5, nprobe=1 + j % 8)
+        for j, (qid, v) in enumerate(sorted(vecs.items()))
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        got = sorted(
+            tuple(r)
+            for r in fresh.search_batch(reqs, max_concurrency=8).collect()
+        )
+    finally:
+        sys.setswitchinterval(interval)
+    want = []
+    for nprobe in range(1, 9):
+        group = [r for r in reqs if r.nprobe == nprobe]
+        qdf = spark.createDataFrame(
+            [(r.query_id, r.qvec) for r in group],
+            "query_id long, qvec array<float>",
+        )
+        want += [tuple(r) for r in index.search(qdf, k=5, nprobe=nprobe).collect()]
+    assert got == sorted(want)
+    assert set(fresh._tier) == set(fresh.access_count)
+    assert fresh._tier_bytes == sum(b.nbytes for b in fresh._tier.values())
+
+
 def test_warmup_evict_cycle(spark, index):
     fresh = ivf.IVFIndex.load(
         spark, index.manager.base_dir, index.manager.index_name

@@ -968,3 +968,85 @@ def test_first_search_after_activation_runs_no_schema_job(
     deleted = [3, 11, 305, 310]
     engine.delete_vectors("fresh", deleted, activate=True)
     assert not {r[2] for r in first_request_budget()} & set(deleted)
+
+
+def test_list_tier_warm_request_runs_one_job(
+    spark, engine, tmp_root, sf_dir, count_jobs
+):
+    """The driver-resident list tier: a cold request reads its probed lists
+    in one job beside the query batch's, a warm one runs the query batch's
+    job only. On a base, then a base + delta + tombstone chain, then a
+    compacted epoch, plain and reranked rows equal the lazy ``search``
+    plan's; a delete followed by activation drops the deleted ids that
+    the previous handle's tier still held. Over its budget the tier
+    reads nothing and the Spark scan gives the same rows."""
+    emb = tables.load(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
+    )
+    emb.filter(F.col("id") < 300).write.parquet(f"{tmp_root}/tier_src")
+    emb.filter((F.col("id") >= 300) & (F.col("id") < 360)).write.parquet(
+        f"{tmp_root}/tier_delta"
+    )
+    # eight base vectors and eight delta vectors
+    picks = emb.filter(
+        (F.col("id") < 8) | F.col("id").between(300, 307)
+    ).orderBy("id").collect()
+    # a frame built from a Python list, as a serving client sends it
+    qdf = spark.createDataFrame(
+        [(i, list(r["vector"])) for i, r in enumerate(picks)],
+        "query_id long, qvec array<float>",
+    )
+
+    def search(**kw):
+        res = engine.search("tier", qdf, topk=10, nprobe=4, **kw)
+        assert res.isLocal()
+        return sorted(tuple(r) for r in res.collect())
+
+    def lazy(**kw):
+        plan = engine._loaded("tier").search(qdf, k=10, nprobe=4, **kw)
+        return sorted(tuple(r) for r in plan.collect())
+
+    def budget(cold_jobs, **kw):
+        cold, n = count_jobs(lambda: search(**kw))
+        assert n["jobs"] <= cold_jobs, (kw, n)
+        warm, n = count_jobs(lambda: search(**kw))
+        assert n["jobs"] == 1, (kw, n)
+        assert cold == warm == lazy(**kw)
+        assert len(warm) == 16 * 10
+        return warm
+
+    engine.create_index("tier", 64, metric="l2", nlist=8)
+    ep = engine.build_epoch("tier", f"{tmp_root}/tier_src", seed=5, max_iter=2)
+    engine.activate_epoch("tier", ep)
+    engine.load_index("tier")
+    budget(2)
+    engine.add_vectors("tier", f"{tmp_root}/tier_delta", activate=True)
+    budget(2)
+    rerank = {"rerank_exact": True, "rerank_k": 20}
+    budget(1, **rerank)  # the plain request already filled its lists
+    # each query is a corpus vector: its own id is its nearest neighbour
+    deleted = [3, 5, 301, 306]
+    assert {r[2] for r in search() if r[1] == 1} >= set(deleted)
+    old = engine._loaded("tier")
+    engine.delete_vectors("tier", deleted, activate=True)
+    assert engine._loaded("tier") is not old and old._tier
+    # a tombstone chain's fill also runs the tombstone broadcast's job
+    for kw in ({}, rerank):
+        assert not {r[2] for r in budget(3, **kw)} & set(deleted)
+    engine.compact_index("tier", activate=True)
+    for kw in ({}, rerank):
+        assert not {r[2] for r in budget(2, **kw)} & set(deleted)
+    # probed lists that do not fit the budget are not read into the tier:
+    # a 1-byte budget empties it, and requests take the pruned Spark scan
+    idx = engine._loaded("tier")
+    warm = search()
+    assert idx._tier and idx._tier_bytes > 0
+    engine.set_warm_budget("tier", 1)
+    try:
+        assert not idx._tier and idx._tier_bytes == 0
+        spark_rows, n = count_jobs(search)
+        assert not idx._tier
+        assert n["jobs"] >= 2, n  # the query batch and the scan
+        assert spark_rows == warm
+    finally:
+        engine.set_warm_budget("tier", None)

@@ -81,16 +81,45 @@ def test_prune_archives_drops_only_redundant_entries(archives):
     assert set(cache) == set(path)
 
 
-def test_default_driver_mem_is_half_ram_capped_at_8g(monkeypatch):
-    def host(ram_bytes):
-        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": ram_bytes // 4096}
-        monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
-        return session.default_driver_mem()
+def _meminfo(total_gib, avail_gib):
+    return (
+        f"MemTotal:       {total_gib << 20} kB\n"
+        f"MemFree:        {avail_gib << 19} kB\n"
+        f"MemAvailable:   {avail_gib << 20} kB\n"
+        "Buffers:           76124 kB\n"
+    )
 
-    assert host(64 << 30) == "8192m"
-    assert host(16 << 30) == "8192m"
-    assert host(15 << 30) == "7680m"
-    assert host(4 << 30) == "2048m"
+
+def test_default_driver_mem_is_half_available_capped_at_8g():
+    """The default heap is half of ``MemAvailable``, capped at 8g: a host
+    with RAM to spare gets 8g, and a second session started beside one
+    that holds half of a 15 GB host gets half of what is left, so the two
+    never claim all of RAM between them."""
+    heap = session.default_driver_mem
+    assert heap(_meminfo(64, 60)) == "8192m"
+    assert heap(_meminfo(16, 16)) == "8192m"
+    assert heap(_meminfo(16, 15)) == "7680m"
+    assert heap(_meminfo(4, 4)) == "2048m"
+    first = heap(_meminfo(15, 15))
+    left = 15 - session.heap_bytes(first) / (1 << 30)
+    second = session.heap_bytes(heap(_meminfo(15, int(left))))
+    assert session.heap_bytes(first) + second < 15 << 30
+    # no MemAvailable line (a non-Linux host): physical RAM stands in
+    assert session.mem_available_bytes("MemTotal: 1 kB\n") == session.host_ram_bytes()
+
+
+def test_heap_that_cannot_fit_fails_at_start_up():
+    """A pre-touched heap larger than the available memory is refused
+    before a JVM starts, with a message that names the heap and the way
+    out; one that fits passes."""
+    assert session.heap_bytes("512m") == 512 << 20
+    assert session.heap_bytes("8g") == 8 << 30
+    assert session.heap_bytes("7680") == 7680 << 20
+    with pytest.raises(ValueError):
+        session.heap_bytes("lots")
+    session.check_heap_fits("2g", _meminfo(16, 3))
+    with pytest.raises(RuntimeError, match=r"8g .* 3072 MiB .*SPARK_GRAFT_DRIVER_MEM"):
+        session.check_heap_fits("8g", _meminfo(16, 3))
 
 
 def test_workers_import_pyspark_from_its_directory(spark):

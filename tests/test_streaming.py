@@ -363,6 +363,39 @@ def test_incremental_topk_converges_to_batch(spark, sf_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_stream_scorer_query_matrix_equals_row_rebuild(spark, sf_dir):
+    """``score_stream_against_queries`` reads its query matrix through
+    ``arrowkit.list_matrix``; its candidates equal, bit for bit, those of
+    a matrix rebuilt row by row from the pandas query frame."""
+    import numpy as np
+
+    from cuda_acceleratedvectordatabaseengine_spark.functions import distance as D
+    from cuda_acceleratedvectordatabaseengine_spark.streaming.topk_stream import (
+        score_stream_against_queries,
+    )
+
+    emb = tables.load(spark, sf_dir, "embeddings")
+    corpus = emb.filter(F.col("vec_id") < 60).select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
+    )
+    q_pdf = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+    ).toPandas()
+    got = sorted(
+        tuple(r) for r in score_stream_against_queries(corpus, q_pdf).collect()
+    )
+    rows = corpus.orderBy("id").collect()
+    V = np.array([np.asarray(r["vector"]) for r in rows], dtype=np.float64)
+    Q = np.array([np.asarray(v) for v in q_pdf["qvec"]], dtype=np.float64)
+    dm = D.pairwise(D.L2, V, Q)  # three queries: the direct per-row form
+    want = sorted(
+        (int(q), int(r["id"]), float(dm[i, j]))
+        for i, r in enumerate(rows)
+        for j, q in enumerate(q_pdf["query_id"])
+    )
+    assert got == want
+
+
 def test_sessionize_batch_matches_session_window(spark, sf_dir):
     """The lag/cumsum batch sessionizer and F.session_window must induce the
     same per-user session partitioning (session count + per-session event

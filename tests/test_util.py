@@ -8,6 +8,8 @@ map-side so the exchange under the final exact limit carries ~n rows.
 """
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from cuda_acceleratedvectordatabaseengine_spark.util import sample_head
@@ -216,3 +218,57 @@ def test_bucket_candidate_pairs_uncapped_falls_back_to_self_join(spark):
     assert "collect_list" not in plan
     # and emits every within-bucket pair (no cap)
     assert (7, 8) in _pairs(out)
+
+
+# adversarial bucket relations: few keys and ids, so buckets collide, ids
+# repeat within and across buckets, singleton (pair-less) buckets abound
+# and bucket sizes straddle the cap; one id may carry several payloads
+_bucket_rows = st.lists(
+    st.tuples(
+        st.integers(0, 2),  # band
+        st.sampled_from(["x", "y"]),  # bucket hash
+        st.integers(0, 7),  # doc id
+        st.sampled_from(["p", "q"]),  # payload
+    ),
+    max_size=24,
+)
+
+
+@given(rows=_bucket_rows, cap=st.integers(1, 6), payload=st.booleans())
+@example(rows=[], cap=1, payload=False)  # no bucket at all
+@example(rows=[(0, "x", 1, "p")] * 3 + [(0, "x", 2, "p")], cap=4, payload=False)
+@example(rows=[(0, "x", 1, "p"), (0, "x", 1, "q"), (0, "x", 2, "p")], cap=3,
+         payload=True)
+@settings(max_examples=20, deadline=None)
+def test_bucket_candidate_pairs_group_explode_equals_self_join(
+    spark, rows, cap, payload
+):
+    """The group-explode path emits exactly the self-join's rows — and the
+    pairs a brute-force reading of the contract gives: within a bucket of
+    at most ``cap`` rows (repeats count), every distinct ``a < b`` pair,
+    with each payload combination."""
+    from cuda_acceleratedvectordatabaseengine_spark import util
+
+    src = spark.createDataFrame(rows, "band int, bh string, doc_id int, sig string")
+    kw = dict(payload_col="sig", out_pa="sa", out_pb="sb") if payload else {}
+    got = {
+        impl: sorted(
+            tuple(r)
+            for r in util.bucket_candidate_pairs(
+                src, ["band", "bh"], "doc_id", "a", "b", cap, impl=impl, **kw
+            ).collect()
+        )
+        for impl in ("group_explode", "self_join")
+    }
+    buckets: dict = {}
+    for band, bh, doc, sig in rows:
+        buckets.setdefault((band, bh), []).append((doc, sig))
+    want = set()
+    for members in buckets.values():
+        if len(members) > cap:
+            continue
+        for a, pa_ in members:
+            for b, pb_ in members:
+                if a < b:
+                    want.add((a, b, pa_, pb_) if payload else (a, b))
+    assert got["group_explode"] == got["self_join"] == sorted(want)
