@@ -315,7 +315,10 @@ def partial_topk_scanner(
     """Build a mapInArrow function: per Arrow batch, zero-copy matrix view +
     dense distance block + batched per-query top-k (np.argpartition ≈
     std::partial_sort, ivf_flat_index.cpp:367-371). No pandas, no per-row
-    Python objects, no per-query loop."""
+    Python objects, no per-query loop. The block only ranks: each kept
+    candidate is reported with its direct-form distance (``D.rowwise``),
+    as ``ivf._list_scanner`` does, because a GEMM's rounding depends on
+    how many rows shared the block, and so on the partitioning."""
     import pyarrow as pa
 
     from ..functions import arrowkit as AK
@@ -328,9 +331,10 @@ def partial_topk_scanner(
             ids = AK.column(rb, id_col, np.int64)
             V = AK.list_matrix(rb, vec_col)
             dmat = D.pairwise(metric, V, Q, ws=ws)  # (n, nq)
-            qcol, flat_ids, flat_d = AK.topk_columns(dmat, ids, k)
+            qcol, row = AK.topk_rows(dmat, k)
             yield AK.batch(
-                query_id=qids[qcol], id=flat_ids, distance=flat_d
+                query_id=qids[qcol], id=ids[row],
+                distance=D.rowwise(metric, V[row], Q[qcol]),
             )
 
     return scan

@@ -16,19 +16,73 @@ at all; every task's ``importlib.invalidate_caches()`` then no longer
 re-reads them. Any other archive, or one it cannot read, stays on the
 path as Spark put it there. Workers find the module through their cwd and
 ``PYTHONPATH``, so this package's parent directory is appended to
-``spark.executorEnv.PYTHONPATH``.
+``spark.executorEnv.PYTHONPATH``. The daemon also imports what a task
+imports (numpy, pyarrow, pandas) and freezes that heap before it forks
+(see ``daemon``).
+
+The executor talks to those workers over Unix-domain sockets
+(``spark.python.unix.domain.socket.enabled``), not loopback TCP: that
+alone took 27-47 ms off a no-op 4-task job on a 4-vCPU host (PERF.md,
+"Python worker transport"). In that mode PySpark sends no worker auth
+secret, so the directory that holds the sockets is the access control:
+the process gets its own, made by ``tempfile.mkdtemp`` (mode 0700), short
+enough for Spark's 60-character limit and AF_UNIX's 108-byte one
+whatever ``TMPDIR`` or ``java.io.tmpdir`` is, and removed when the
+process exits (not when a session stops: see ``process_socket_dir``). A
+caller's own ``spark.python.unix.domain.socket.dir`` is used as given and
+never removed.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
 import re
+import shutil
+import tempfile
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # the directory that holds this package, for the workers' PYTHONPATH
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+# Spark rejects a spark.python.unix.domain.socket.dir of 61 characters or
+# more; under it, each ".<uuid4>.sock" path fits AF_UNIX's 108-byte sun_path
+_SOCKET_DIR_MAX = 60
+_SOCKET_DIR_PREFIX = "cavde-py-"
+_socket_dir: str | None = None
+
+
+def worker_socket_dir() -> str:
+    """Create a private (0700) directory for Unix sockets, in
+    ``tempfile.gettempdir()`` when its path there is short enough for
+    Spark, else in ``/tmp``."""
+    # mkdtemp appends 8 random characters to the prefix
+    leaf = _SOCKET_DIR_PREFIX + "x" * 8
+    for root in (tempfile.gettempdir(), "/tmp"):
+        if len(os.fsencode(os.path.join(root, leaf))) <= _SOCKET_DIR_MAX:
+            return tempfile.mkdtemp(prefix=_SOCKET_DIR_PREFIX, dir=root)
+    raise RuntimeError(
+        "no temporary directory is short enough for Unix sockets; set "
+        "spark.python.unix.domain.socket.dir to a short private directory"
+    )
+
+
+def process_socket_dir() -> str:
+    """This process's Unix-socket directory, made on first use by
+    ``worker_socket_dir`` and removed when the process exits. Every
+    session ``get_spark`` starts here shares it, because the JVM keeps the
+    directory of its first session: ``PythonRDD``'s result server reads
+    its conf once per JVM (a lazy ``authHelper``), so removing the
+    directory when that session stops would break ``collect`` in every
+    later session of the process."""
+    global _socket_dir
+    if _socket_dir is None:
+        _socket_dir = worker_socket_dir()
+        atexit.register(shutil.rmtree, _socket_dir, True)
+    return _socket_dir
 
 
 def host_ram_bytes() -> int:
@@ -148,11 +202,17 @@ def get_spark(
         # default; read as long nanos, converted in sources.tables.load
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.python.daemon.module", f"{__package__}.daemon")
+        .config("spark.python.unix.domain.socket.enabled", "true")
     )
-    if pretouch and SparkContext._active_spark_context is None:
+    new_context = SparkContext._active_spark_context is None
+    if pretouch and new_context:
         # only a new JVM commits a heap; getOrCreate reuses a live one
         check_heap_fits(mem)
     conf = dict(extra_conf or {})
+    if new_context and "spark.python.unix.domain.socket.dir" not in conf:
+        builder = builder.config(
+            "spark.python.unix.domain.socket.dir", process_socket_dir()
+        )
     user_path = conf.get("spark.executorEnv.PYTHONPATH", "")
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         p for p in (user_path, _PACKAGE_ROOT) if p

@@ -56,6 +56,30 @@ def test_exact_knn_matches_numpy_oracle(spark, corpus, queries, metric, impl):
         )
 
 
+def test_exact_knn_rows_do_not_depend_on_partitioning(spark):
+    """On L2 with more than 8 queries the scanner's distance block is a
+    GEMM, whose rounding depends on how many rows share the block. It
+    only ranks: the reported distances are direct-form, so the rows are
+    identical with the corpus in one partition and in four."""
+    rng = np.random.default_rng(7)
+    V = rng.normal(size=(400, 32)).astype(np.float32)
+    Q = rng.normal(size=(12, 32)).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, V[i].tolist()) for i in range(len(V))], "id long, vector array<float>"
+    )
+    qdf = spark.createDataFrame(
+        [(i, Q[i].tolist()) for i in range(len(Q))], "query_id long, qvec array<float>"
+    )
+
+    def rows(parts):
+        res = knn.exact_knn(df.repartition(parts), qdf, k=10, metric=D.L2)
+        return sorted(tuple(r) for r in res.collect())
+
+    one = rows(1)
+    assert len(one) == 12 * 10
+    assert rows(4) == one
+
+
 def test_result_invariants(spark, corpus, queries):
     # reference invariants: ids in range, distances finite & non-negative for
     # L2, per query non-decreasing distance, no dup ids
