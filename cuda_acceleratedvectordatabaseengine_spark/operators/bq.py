@@ -178,4 +178,4 @@ class IVFBQIndex(CodeIndex):
         def score(codes, lid, qidx, ws):
             return hamming_matrix(codes, Qb[qidx])
 
-        return score
+        return None, score

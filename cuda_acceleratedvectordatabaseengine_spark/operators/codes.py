@@ -1,18 +1,23 @@
 """The quantized-list index shell shared by PQ, SQ8 and BQ.
 
 The reference declares ONE compressed index, IVFPQIndex
-(engine/ivf_flat_index.h:107-189), with one search path: probe ``nprobe``
-lists, scan their codes, merge top-k, optionally re-score exactly. Every
-codec here runs that path through ``CodeIndex``, which owns the epoch
-plumbing (lazy relations, load, delta/chain encodes, sidecar maintenance)
-and the search frame. A codec keeps only what is its own:
+(engine/ivf_flat_index.h:107-189), with the search path of IVF-Flat:
+probe ``nprobe`` lists, scan their codes, merge top-k, optionally
+re-score exactly; only the list score differs (the ADC scan,
+engine/kernels.cuh:226-312). Here too every codec searches through the
+flat handle's frame (``ivf.ProbedSearch``): the one ``_list_scanner``
+kernel runs over the probed code lists with the codec's list score, and
+a rerank joins the shortlist back to the probed raw vectors
+(``ivf.ProbedScan.merge``). ``CodeIndex`` owns the epoch plumbing (lazy
+relations, load, delta/chain encodes, sidecar maintenance). A codec
+keeps only what is its own:
 
 - ``kind``: the manifest field, codes dir and recall-stamp surface;
 - training (``build_from_ivf``) and its ``encode_epoch`` signature;
 - ``encode_frame``: its distributed encoder (all of them run the one
   ``encode_codes`` writer with their own batch encoder);
 - ``code_width``, ``stamp``, ``write_params`` / ``read_params``;
-- ``list_scorer``: the per-list score hook of the search scan.
+- ``list_scorer``: the scan's decode and per-list score hooks.
 
 Scope semantics: a scope="chain" encode (full build or compaction
 re-encode) covers the epoch's whole chain and serves alone; a
@@ -31,19 +36,16 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions import distance as D
 from ..sources.epochs import (
     EpochManager,
     Manifest,
     fold_chain_codes,
     nearest_sidecar_epoch,
-    prune_lists,
     read_list_leg,
     sidecar_paths,
     write_list_partitioned,
 )
-from . import knn
-from .ivf import IVFIndex, resolve_nprobe, select_nprobe_lists
+from .ivf import IVFIndex, ProbedSearch
 
 
 def encode_codes(
@@ -87,7 +89,7 @@ def encode_codes(
 
 
 @dataclass(kw_only=True)
-class CodeIndex:
+class CodeIndex(ProbedSearch):
     """IVF coarse structure + one codec's encoded lists in the same epoch
     dir. Subclasses add their param fields (named as in ``read_params``)."""
 
@@ -163,9 +165,13 @@ class CodeIndex:
         raise NotImplementedError
 
     def list_scorer(self, Q: np.ndarray, metric: str):
-        """Driver-side: return ``score(codes, list_id, qidx, ws)`` -> (n,
-        len(qidx)) distances between one list's codes and ``Q[qidx]``. It
-        runs in executors, so it must not capture self."""
+        """Driver-side: return ``(decode, score)`` for the search scan
+        (``ivf._list_scanner``). ``decode(codes)`` maps a batch's (n,
+        code_width) codes to the rows scored, None keeping the codes;
+        ``score(rows, list_id, qidx, ws)`` gives the (n, len(qidx)) scores
+        of one list's rows against ``Q[qidx]``, which the scan reports.
+        A None score scores decoded float rows as the flat scan does. Both
+        run in executors, so they must not capture self."""
         raise NotImplementedError
 
     # -- handles -----------------------------------------------------------
@@ -308,108 +314,18 @@ class CodeIndex:
         params = cls.read_params(ivf_index.spark, mgr, anc)
         return cls.encode_params(ivf_index, params, scope="delta")
 
-    # -- search ------------------------------------------------------------
-    def search(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: "int | None" = None,
-        metric: str | None = None,
-        rerank_exact: bool = False,
-        rerank_k: int | None = None,
-        query_id_col: str = "query_id",
-        qvec_col: str = "qvec",
-        where: "str | None" = None,
-    ) -> DataFrame:
-        """Probe lists, scan their codes with the codec's per-list score,
-        merge top-k; optionally re-score the top rerank_k candidates
-        exactly against the raw vectors. ``metric`` applies to the coarse
-        probe and the exact rerank (default: index metric).
-
-        ``where``: filtered search — a predicate over the index columns
-        (``id``, ``list_id``) applied inside BOTH the pruned code scan and
-        the rerank join-back (see ``IVFIndex.search``)."""
-        knn.validate_topk(k)
-        nprobe = resolve_nprobe(self.manifest, nprobe, self.surface)
-        metric = D.parse_metric(metric or self.metric)
-        qids, Q = knn.collect_query_matrix(queries, query_id_col, qvec_col)
-        if len(qids) == 0:
-            raise ValueError("empty query batch")
-        if Q.shape[1] != self.dimension:
-            raise ValueError(
-                f"query dimension {Q.shape[1]} != index dimension {self.dimension}"
-            )
-        probe = select_nprobe_lists(self.centroids, Q, nprobe, metric)
-        score = self.list_scorer(Q, metric)
-        fetch_k = max(k, rerank_k or 0) if rerank_exact else k
-        by_list: dict = {}
-        for qi, lists in enumerate(probe):
-            for lid in lists:
-                by_list.setdefault(int(lid), []).append(qi)
-        by_list = {
-            lid: np.asarray(qs, dtype=np.int64) for lid, qs in by_list.items()
-        }
+    # -- search (ProbedSearch) ---------------------------------------------
+    def _scan_source(self, Q: np.ndarray, metric: str):
+        decode, score = self.list_scorer(Q, metric)
         width = self.code_width
 
-        def scan(batches):
+        def rows(rb):
             from ..functions import arrowkit as AK
 
-            ws: dict = D.task_workspace()  # process-pooled workspace (r14)
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                all_ids = AK.column(rb, "id", np.int64)
-                all_lids = AK.column(rb, "list_id", np.int64)
-                all_codes = AK.binary_matrix(rb, "codes", width)
-                for lid in np.unique(all_lids):
-                    qidx = by_list.get(int(lid))
-                    if qidx is None:
-                        continue
-                    mask = all_lids == lid
-                    dmat = score(all_codes[mask], int(lid), qidx, ws)
-                    qcol, flat_ids, flat_d = AK.topk_columns(
-                        dmat, all_ids[mask], fetch_k
-                    )
-                    yield AK.batch(
-                        query_id=qids[qidx][qcol], id=flat_ids, distance=flat_d
-                    )
+            codes = AK.binary_matrix(rb, "codes", width)
+            return codes if decode is None else decode(codes)
 
-        needed = sorted(by_list)
-        pruned = prune_lists(self.codes, needed, self.lists_per_bucket)
-        if where is not None:
-            pruned = pruned.filter(where)
-        cand = pruned.select("id", "list_id", "codes").mapInArrow(
-            scan, schema=knn.CANDIDATE_SCHEMA
-        )
-        if not rerank_exact:
-            return knn.topk_per_query(cand, k, dedup=True)
-        shortlist = knn.topk_per_query(cand, fetch_k, dedup=True).select(
-            "query_id", "id"
-        )
-        return self.rerank(shortlist, qids, Q, k, metric, lists=needed, where=where)
-
-    def rerank(
-        self,
-        shortlist: DataFrame,
-        qids: np.ndarray,
-        Q: np.ndarray,
-        k: int,
-        metric: str,
-        lists: "list[int] | None" = None,
-        where: "str | None" = None,
-    ) -> DataFrame:
-        """T7: exact re-scoring of code-scan candidates against the raw
-        vectors (shared join-back kernel, knn.exact_rerank). ``lists``
-        prunes the vector scan to the probed partitions — candidates live
-        only there by construction, so the join-back must not read the
-        full corpus; ``where`` keeps a filtered search's predicate on the
-        rerank source."""
-        vectors = self.vectors
-        if lists is not None:
-            vectors = prune_lists(vectors, lists, self.lists_per_bucket)
-        if where is not None:
-            vectors = vectors.filter(where)
-        return knn.exact_rerank(vectors, shortlist, qids, Q, k, metric)
+        return self.codes, (rows, score)
 
 
 def codecs() -> "dict[str, type[CodeIndex]]":

@@ -26,7 +26,6 @@ ivf_flat_index.cpp:232-233); nprobe defaults to 8
 
 from __future__ import annotations
 
-import functools
 import threading
 from collections.abc import Iterator
 from dataclasses import dataclass, field
@@ -436,7 +435,7 @@ FUSE_INFLATION_CAP = 1.0
 
 # Quantized-first-pass cascade (r8): SQ8-shortlist scan + pruned exact
 # rerank — only ``rerank_k`` candidate rows per query re-enter Python
-# with raw floats (JVM-side broadcast semi-join, knn.exact_rerank), so
+# with raw floats (JVM-side broadcast semi-join, knn.exact_rescore), so
 # results are exact re-scored distances, and the scanned SIDE CAR bytes
 # are 4x smaller than the float vectors. The r7 verdict hypothesized
 # this as the default scale path (the scan floor is Arrow-IPC
@@ -479,6 +478,50 @@ CASCADE_RERANK_MIN = 64
 COLD_CASCADE_MAX_FRACTION = 0.03
 
 
+def _score_units(lids: np.ndarray, by_list: "dict[int, np.ndarray]", fuse_cap: float):
+    """The score units of one batch of a pruned scan: ``(rows, qset,
+    pairs, list_id)``, where ``rows`` masks the batch rows scored against
+    the queries ``Q[qset]`` and ``pairs`` is None or masks, over that
+    block, the (row, query) pairs whose list the query probed. ``list_id``
+    is the unit's list, or None for a unit that fuses several.
+
+    Query-locality fusion (cost-gated, default effectively work-neutral
+    — see ``FUSE_INFLATION_CAP`` for the measured rationale): when a
+    batch's probed lists share one query set (single-list batches; the
+    full-probe shape), they form ONE unit against the query union, and
+    the scan masks non-probed (list, query) pairs to +inf — identical
+    candidates, fewer BLAS calls. With disjoint per-list query sets the
+    union would inflate FLOPs, which the interleaved A/B showed is a net
+    loss on >=1K-row lists, so the gate keeps one unit per list there."""
+    ul, inv = np.unique(lids, return_inverse=True)
+    qsets = [by_list.get(int(lid)) for lid in ul]
+    pidx = [i for i, qs in enumerate(qsets) if qs is not None]
+    if not pidx:
+        return
+    rows_per = np.bincount(inv, minlength=len(ul))
+    flops_exact = float(sum(int(rows_per[i]) * len(qsets[i]) for i in pidx))
+    q_union = (
+        qsets[pidx[0]]
+        if len(pidx) == 1
+        else np.unique(np.concatenate([qsets[i] for i in pidx]))
+    )
+    probed_ul = np.zeros(len(ul), dtype=bool)
+    probed_ul[pidx] = True
+    rmask = probed_ul[inv]
+    if float(int(rmask.sum())) * len(q_union) <= fuse_cap * flops_exact:
+        if len(pidx) == 1:
+            yield rmask, q_union, None, int(ul[pidx[0]])
+            return
+        pos = {int(q): j for j, q in enumerate(q_union)}
+        P = np.zeros((len(ul), len(q_union)), dtype=bool)
+        for i in pidx:
+            P[i, [pos[int(q)] for q in qsets[i]]] = True
+        yield rmask, q_union, P[inv[rmask]], None
+        return
+    for i in pidx:
+        yield inv == i, qsets[i], None, int(ul[i])
+
+
 def _list_scanner(
     qids: np.ndarray,
     Q: np.ndarray,
@@ -486,28 +529,30 @@ def _list_scanner(
     k: int,
     metric: str,
     fuse_cap: "float | None" = None,
+    scorer=None,
 ):
-    """mapInArrow over the pruned {id, vector, list_id} scan: score each
-    inverted list in the batch against exactly the queries that probed it
-    — zero-copy matrix views, batched per-query top-k (no Python loops
-    over rows or queries) — and emit ONE top-k per query per task,
-    deduplicated by id (minimum distance) with ties broken by id
+    """mapInArrow over the pruned {id, list_id, vector | codes} scan: score
+    each inverted list in the batch against exactly the queries that
+    probed it — zero-copy matrix views, batched per-query top-k (no
+    Python loops over rows or queries) — and emit ONE top-k per query per
+    task, deduplicated by id (minimum distance) with ties broken by id
     (``knn.merge_topk_arrays``). The merge downstream then reads at most
     tasks x nq x k candidate rows, however many batches and lists a task
-    scanned. A candidate's distance is its exact direct-form distance
-    (``exact_topk``), so rows do not depend on how the lists were cut
-    into batches and tasks. The driver-resident list tier runs this same
-    closure over its blocks (``ProbedScan.merge_resident``).
+    scanned. The driver-resident list tier runs this same closure over
+    its blocks (``ProbedScan.merge_resident``).
 
-    Query-locality fusion (cost-gated, default effectively work-neutral
-    — see ``FUSE_INFLATION_CAP`` for the measured rationale): when a
-    batch's probed lists share one query set (single-list batches; the
-    full-probe shape), the scanner scores them in ONE GEMM against the
-    query union, masking non-probed (list, query) pairs to +inf before
-    the top-k — identical candidates, fewer BLAS calls. With disjoint
-    per-list query sets the union would inflate FLOPs, which the
-    interleaved A/B showed is a net loss on >=1K-row lists, so the gate
-    keeps the exact per-list loop there."""
+    ``scorer`` is a code handle's list score (``CodeIndex.list_scorer``):
+    a pair ``(rows, score)``, where ``rows(rb)`` is a batch's row matrix
+    and ``score(block, list_id, qidx, ws)`` the (n, len(qidx)) scores of
+    one list's rows against ``Q[qidx]``, reported as they are (PQ's LUT
+    sums, BQ's Hamming distances). A score runs list by list. Without a
+    score the rows are float vectors — the flat ``vector`` column when
+    ``scorer`` is None, or SQ's decoded codes — and a GEMM only ranks
+    them: each kept candidate is reported with its direct-form distance
+    (``D.rowwise``). A GEMM's rounding depends on the block's shape, so
+    rows then do not depend on how the lists were cut into batches and
+    tasks. The batch plan (``_score_units``) fuses float blocks up to
+    ``fuse_cap``."""
     import pyarrow as pa
 
     from ..functions import arrowkit as AK
@@ -516,69 +561,42 @@ def _list_scanner(
     # pickled closure carries the value and probes/tests can patch it
     if fuse_cap is None:
         fuse_cap = FUSE_INFLATION_CAP
-
+    rows, score = scorer or ((lambda rb: AK.list_matrix(rb, "vector")), None)
+    if score is not None:
+        fuse_cap = 0.0  # PQ's residual tables are per list
     # invert: list_id -> query row indices
     by_list: dict[int, list[int]] = {}
     for qi, lists in enumerate(probe_lists):
         for lid in lists:
             by_list.setdefault(int(lid), []).append(qi)
-    by_list_np = {lid: np.asarray(qs, dtype=np.int64) for lid, qs in by_list.items()}
+    by_list = {lid: np.asarray(qs, dtype=np.int64) for lid, qs in by_list.items()}
     # held candidate rows are merged down to <= nq*k once they pass this
     compact_at = max(2 * len(qids) * k, 1 << 16)
 
-    def exact_topk(Vs, sub_ids, qset, dmat):
-        """A block's per-query top-k, each candidate reported with its
-        direct-form distance (``D.rowwise``): the block's GEMM only ranks.
-        A GEMM's rounding depends on the block's shape, so this keeps a
-        candidate's distance, and the rows of any merge, independent of
-        which rows shared its block (one Spark task's batch, a chain leg,
-        a compacted list, a driver-resident block). k is clipped to the
-        candidate count (ivf_flat_index.cpp:232-233); +inf masked pairs
-        drop out."""
-        qcol, row = AK.topk_rows(dmat, k)
-        keep = np.isfinite(dmat[row, qcol])
-        qi, row = qset[qcol[keep]], row[keep]
-        return qids[qi], sub_ids[row], D.rowwise(metric, Vs[row], Q[qi])
-
     def batch_candidates(rb, ws):
-        """(query_id, id, distance) arrays of one batch's per-list top-k."""
+        """(query_id, id, distance) arrays of one batch's per-unit top-k;
+        k is clipped to the candidate count (ivf_flat_index.cpp:232-233),
+        and +inf masked pairs drop out."""
         ids = AK.column(rb, "id", np.int64)
+        B = rows(rb)
         lids = AK.column(rb, "list_id", np.int64)
-        V = AK.list_matrix(rb, "vector")
-        ul, inv = np.unique(lids, return_inverse=True)
-        qsets = [by_list_np.get(int(lid)) for lid in ul]
-        pidx = [i for i, qs in enumerate(qsets) if qs is not None]
-        if not pidx:
-            return
-        rows_per = np.bincount(inv, minlength=len(ul))
-        flops_exact = float(sum(int(rows_per[i]) * len(qsets[i]) for i in pidx))
-        q_union = (
-            qsets[pidx[0]]
-            if len(pidx) == 1
-            else np.unique(np.concatenate([qsets[i] for i in pidx]))
-        )
-        probed_ul = np.zeros(len(ul), dtype=bool)
-        probed_ul[pidx] = True
-        rmask = probed_ul[inv]
-        flops_fused = float(int(rmask.sum())) * len(q_union)
-        if flops_fused <= fuse_cap * flops_exact:
-            # one GEMM over the batch's probed rows x the query union,
-            # non-probed (list, query) pairs masked out of the top-k
-            Vs = V[rmask]
-            dmat = D.pairwise(metric, Vs, Q[q_union], ws=ws)
-            if len(pidx) > 1:
-                pos = {int(q): j for j, q in enumerate(q_union)}
-                P = np.zeros((len(ul), len(q_union)), dtype=bool)
-                for i in pidx:
-                    P[i, [pos[int(q)] for q in qsets[i]]] = True
-                dmat[~P[inv[rmask]]] = np.inf
-            yield exact_topk(Vs, ids[rmask], q_union, dmat)
-            return
-        for i in pidx:
-            mask = inv == i
-            Vs = V[mask]
-            dmat = D.pairwise(metric, Vs, Q[qsets[i]], ws=ws)  # (n, nq_sub)
-            yield exact_topk(Vs, ids[mask], qsets[i], dmat)
+        for sel, qset, pairs, lid in _score_units(lids, by_list, fuse_cap):
+            Bs = B[sel]
+            if score is None:
+                dmat = D.pairwise(metric, Bs, Q[qset], ws=ws)
+            else:
+                dmat = score(Bs, lid, qset, ws)
+            if pairs is not None:
+                dmat[~pairs] = np.inf
+            qcol, row = AK.topk_rows(dmat, k)
+            keep = np.isfinite(dmat[row, qcol])
+            qcol, row = qcol[keep], row[keep]
+            qi = qset[qcol]
+            yield qids[qi], ids[sel][row], (
+                D.rowwise(metric, Bs[row], Q[qi])
+                if score is None
+                else dmat[row, qcol]
+            )
 
     def merged(parts):
         q, _rank, i, d = knn.merge_topk_arrays(
@@ -639,13 +657,9 @@ def _range_list_scanner(
 ):
     """mapInArrow over the pruned scan: per inverted list, emit every
     (query, id, distance) pair within radius, scoring only the queries whose
-    pruning mask admitted the list.
-
-    Same query-locality fusion as ``_list_scanner`` (one bucket-local GEMM
-    per batch when the union of admitted queries is economical, non-
-    admitted (list, query) pairs masked to +inf so the radius filter drops
-    them) — range queries hit the identical sliver-GEMM wall at high
-    nlist."""
+    pruning mask admitted the list. The batch plan is ``_list_scanner``'s
+    (``_score_units``): non-admitted (list, query) pairs of a fused block
+    are masked to +inf, so the radius filter drops them."""
     import pyarrow as pa
 
     from ..functions import arrowkit as AK
@@ -659,52 +673,17 @@ def _range_list_scanner(
             if rb.num_rows == 0:
                 continue
             ids = AK.column(rb, "id", np.int64)
-            lids = AK.column(rb, "list_id", np.int64)
             V = AK.list_matrix(rb, "vector")
-            ul, inv = np.unique(lids, return_inverse=True)
-            qsets = [by_list.get(int(lid)) for lid in ul]
-            pidx = [i for i, qs in enumerate(qsets) if qs is not None]
-            if not pidx:
-                continue
-            rows_per = np.bincount(inv, minlength=len(ul))
-            flops_exact = float(
-                sum(int(rows_per[i]) * len(qsets[i]) for i in pidx)
-            )
-            q_union = (
-                qsets[pidx[0]]
-                if len(pidx) == 1
-                else np.unique(np.concatenate([qsets[i] for i in pidx]))
-            )
-            probed_ul = np.zeros(len(ul), dtype=bool)
-            probed_ul[pidx] = True
-            rmask = probed_ul[inv]
-            flops_fused = float(int(rmask.sum())) * len(q_union)
-            if flops_fused <= fuse_cap * flops_exact:
-                sub_ids = ids[rmask]
-                dmat = D.pairwise(metric, V[rmask], Q[q_union], ws=ws)
-                if len(pidx) > 1:
-                    pos = {int(q): j for j, q in enumerate(q_union)}
-                    P = np.zeros((len(ul), len(q_union)), dtype=bool)
-                    for i in pidx:
-                        P[i, [pos[int(q)] for q in qsets[i]]] = True
-                    dmat[~P[inv[rmask]]] = np.inf
+            lids = AK.column(rb, "list_id", np.int64)
+            for sel, qset, pairs, _lid in _score_units(lids, by_list, fuse_cap):
+                dmat = D.pairwise(metric, V[sel], Q[qset], ws=ws)
+                if pairs is not None:
+                    dmat[~pairs] = np.inf
                 rows, cols = np.nonzero(dmat <= radius)
                 if rows.size:
                     yield AK.batch(
-                        query_id=qids[q_union[cols]],
-                        id=sub_ids[rows],
-                        distance=dmat[rows, cols],
-                    )
-                continue
-            for i in pidx:
-                qidx = qsets[i]
-                mask = inv == i
-                dmat = D.pairwise(metric, V[mask], Q[qidx], ws=ws)
-                rows, cols = np.nonzero(dmat <= radius)
-                if rows.size:
-                    yield AK.batch(
-                        query_id=qids[qidx][cols],
-                        id=ids[mask][rows],
+                        query_id=qids[qset[cols]],
+                        id=ids[sel][rows],
                         distance=dmat[rows, cols],
                     )
 
@@ -713,17 +692,26 @@ def _range_list_scanner(
 
 @dataclass
 class ProbedScan:
-    """A flat search up to its T4 merge: the query batch, its probe and
-    the scan's parameters. Either the pruned Spark scan finishes it
-    (``merge``), or driver-resident list blocks do (``merge_resident``);
-    both run the one ``_list_scanner`` kernel.
+    """A search up to its T4 merge, on a flat or a quantized handle: the
+    query batch, its probe and the scan's parameters. Either the pruned
+    Spark scan finishes it (``merge``), or driver-resident list blocks do
+    (``merge_resident``); both run the one ``_list_scanner`` kernel, with
+    the handle's ``scorer``.
+
+    The scan keeps a top-``fetch_k`` (``rerank_k`` on a rerank). Where its
+    distances are the result (``rerank_source`` None), the merge takes k
+    of them; a rerank on an exact scan needs nothing more. A code scan's
+    rerank joins its shortlist back to the raw vectors of the same probed
+    lists, under the same ``where``, and re-ranks their exact distances.
 
     On Spark, the scan emits one top-``fetch_k`` per query per scan task,
     so at most ``max_candidates`` rows — a list's rows can sit in several
     tasks (a delta chain's legs, split files), so the bound counts tasks,
     not probed lists. The Spark plan is built on first use only."""
 
-    source: DataFrame  # the chain's live {id, vector, list_id} relation
+    source: DataFrame  # the chain's live {id, list_id, vector | codes}
+    scorer: "tuple | None"  # a code handle's list score (_list_scanner)
+    rerank_source: "DataFrame | None"  # raw vectors a shortlist re-scores against
     lpb: "int | None"
     where: "str | Column | None"
     qids: np.ndarray
@@ -732,7 +720,6 @@ class ProbedScan:
     k: int
     fetch_k: int
     metric: str
-    rerank_exact: bool
     scan_tasks: int
 
     @property
@@ -743,44 +730,55 @@ class ProbedScan:
     def max_candidates(self) -> int:
         return len(self.qids) * self.scan_tasks * self.fetch_k
 
-    @functools.cached_property
-    def pruned(self) -> DataFrame:
-        """The probe-pruned scan, also the rerank join-back source."""
-        pruned = prune_lists(self.source, self.lists, self.lpb)
+    def pruned(self, df: DataFrame) -> DataFrame:
+        """``df`` read at the probed lists only, under ``where``, in one
+        wave of Python tasks: a delta chain's base and delta legs (and a
+        list's split files) share tasks instead of queueing a second wave
+        behind the first."""
+        pruned = prune_lists(df, self.lists, self.lpb)
         if self.where is not None:
             pruned = pruned.filter(self.where)
-        # one wave of Python tasks: a delta chain's base and delta legs
-        # (and a list's split files) share tasks instead of queueing a
-        # second wave behind the first
         return pruned.coalesce(self.scan_tasks)
 
     def scanner(self):
-        return _list_scanner(self.qids, self.Q, self.probe, self.fetch_k, self.metric)
+        return _list_scanner(
+            self.qids, self.Q, self.probe, self.fetch_k, self.metric,
+            scorer=self.scorer,
+        )
 
     def merge(self, topk) -> DataFrame:
         # dedup-by-id merge (T4): ids are unique per list, but the reference
         # dedups on merge regardless (ivf_flat_index.cpp:493-504)
-        cand = self.pruned.select("id", "vector", "list_id").mapInArrow(
-            self.scanner(), schema=knn.CANDIDATE_SCHEMA
+        cand = (
+            self.pruned(self.source)
+            .drop("list_bucket")
+            .mapInArrow(self.scanner(), schema=knn.CANDIDATE_SCHEMA)
         )
-        if not self.rerank_exact:
+        if self.rerank_source is None:
             return topk(cand, self.k)
         shortlist = topk(cand, self.fetch_k).select("query_id", "id")
-        # rerank source = the SAME pruned scan: every shortlist candidate
-        # lives in a probed list by construction, so joining back against
-        # the full chain would read nlist/nprobe x more partitions for
-        # exactly zero extra matches
+        # every shortlisted candidate lives in a probed list, so joining
+        # back against the full chain would read nlist/nprobe x more
+        # partitions for exactly zero extra matches
         rescored = knn.exact_rescore(
-            self.pruned, shortlist, self.qids, self.Q, self.metric
+            self.pruned(self.rerank_source), shortlist, self.qids, self.Q,
+            self.metric,
         )
         return topk(rescored, self.k)
 
+    def merge_local(self) -> DataFrame:
+        """``merge`` with the T4 merge on the driver (``knn.local_topk``)
+        while the candidates fit ``knn.LOCAL_MERGE_MAX_ROWS``, distributed
+        (``knn.topk_per_query``) above it."""
+        if self.max_candidates > knn.LOCAL_MERGE_MAX_ROWS:
+            return self.merge(knn.topk_per_query)
+        return self.merge(knn.local_topk)
+
     def merge_resident(self, spark: SparkSession, blocks: list) -> DataFrame:
         """``merge(knn.local_topk)`` over the probed lists' driver-resident
-        ``{id, vector, list_id}`` blocks, with no Spark job: the blocks run
-        through the scan kernel as one task's batches, and a rerank
-        re-scores its shortlist against the same rows, as ``exact_rescore``
-        does against the pruned scan."""
+        ``{id, vector, list_id}`` blocks of an exact scan, with no Spark
+        job: the blocks run through the scan kernel as one task's
+        batches."""
         from ..functions import arrowkit as AK
 
         out = next(self.scanner()(iter(blocks)), None)
@@ -790,25 +788,153 @@ class ProbedScan:
             if out is None
             else [AK.column(out, c, t) for c, t in cols]
         )
-        if self.rerank_exact and len(q):
-            import pyarrow as pa
-
-            q, _rank, i, _d = knn.merge_topk_arrays(q, i, d, self.fetch_k)
-            # the shortlist joined to every probed row with its id
-            ids = np.concatenate([AK.column(b, "id", np.int64) for b in blocks])
-            hit = pa.table({"query_id": q, "id": i}).join(
-                pa.table({"id": ids, "row": np.arange(len(ids))}), "id"
-            )
-            q, i, rows = (hit[c].to_numpy() for c in ("query_id", "id", "row"))
-            V = np.concatenate([AK.list_matrix(b, "vector") for b in blocks])
-            qsort = np.argsort(self.qids)
-            qrows = qsort[np.searchsorted(self.qids[qsort], q)]
-            d = D.rowwise(self.metric, V[rows], self.Q[qrows])
         return knn.result_frame(spark, *knn.merge_topk_arrays(q, i, d, self.k))
 
 
+class ProbedSearch:
+    """The search frame of every IVF handle, flat (``IVFIndex``) or
+    quantized (``codes.CodeIndex``): ``_probed_scan`` checks a request,
+    collects its query batch and probes it; ``search`` and
+    ``search_local`` finish the ``ProbedScan``, the latter over the
+    driver-resident blocks ``_resident_blocks`` gives, if any (only the
+    flat handle keeps a list tier). A handle provides
+    ``spark``, ``manifest``, ``centroids``, ``surface``,
+    ``scan_is_exact``, ``lists_per_bucket``, ``vectors`` and
+    ``_scan_source(Q, metric)`` -> (the live scan relation, its scorer)."""
+
+    def search(
+        self,
+        queries: DataFrame,
+        k: int,
+        nprobe: "int | None" = None,
+        metric: str | None = None,
+        rerank_exact: bool = False,
+        rerank_k: int | None = None,
+        query_id_col: str = "query_id",
+        qvec_col: str = "qvec",
+        where: "str | Column | None" = None,
+        cascade: str = "auto",
+    ) -> DataFrame:
+        """Batched IVF search -> {query_id, rank, id, distance}, as a lazy
+        plan: the query batch and the probe run now, the pruned scan and
+        the distributed T4 merge (``knn.topk_per_query``) run at the
+        caller's action. ``search_local`` runs the same search at once,
+        merging on the driver. ``metric`` applies to the probe and to
+        exact distances (default: the index metric).
+
+        ``rerank_exact``/``rerank_k`` (proto/vdb.proto:22 — declared for any
+        index type): keep the top ``rerank_k`` candidates of the probed
+        scan, re-score them exactly, re-rank to k. A flat scan already
+        reports exact distances, so there it only widens the scan's
+        per-task top-k; a code scan's shortlist joins back to the raw
+        vectors of the probed lists (``ProbedScan.merge``).
+
+        ``where`` — filtered search (beyond the reference, which has no
+        filter field in its proto): a predicate over the index columns
+        (``id``, ``list_id``), as a SQL string or Column, applied INSIDE
+        the pruned scan (and a rerank's join-back) so Catalyst pushes it
+        to the parquet reader. Top-k then ranks only qualifying vectors —
+        the standard "ANN within a subset" shape (per-language corpora,
+        allowlists, tenant slices). For metadata richer than the id, join
+        the allowlist to ids first and pass ``id IN`` / a membership
+        predicate.
+
+        ``cascade`` — flat handles only (``IVFIndex._probed_scan``): the
+        SQ8-shortlist + pruned exact rerank path (results are exact
+        re-scored distances). ``"sq"`` forces it (raises without the
+        sidecar); ``"off"`` always scans flat floats; ``"auto"`` (the
+        only value a code handle takes) self-selects from the manifest's
+        declared I/O regime (``build(storage="cold")``): cascade when the
+        epoch is stamped cold AND this query's probed fraction is below
+        ``COLD_CASCADE_MAX_FRACTION`` — the regime where the 4x byte cut
+        measurably wins (1.39x cold at 0.78% probed,
+        scripts/artifacts_cascade_cold_768d.json) — flat otherwise (warm
+        page-cached storage refutes the cascade at every probe shape;
+        r8/r10/r11 interleaved A/Bs). ``CASCADE_AUTO_DEFAULT`` remains
+        the regime-less global override."""
+        scan = self._probed_scan(
+            queries, k, nprobe, metric, rerank_exact, rerank_k,
+            query_id_col, qvec_col, where, cascade,
+        )
+        if isinstance(scan, DataFrame):
+            return scan  # the SQ cascade answered
+        return scan.merge(knn.topk_per_query)
+
+    def search_local(self, queries: DataFrame, k: int, **kw) -> DataFrame:
+        """``search`` (same arguments), executed now, with the T4 merge on
+        the driver whenever the candidate relation is bounded by
+        ``knn.LOCAL_MERGE_MAX_ROWS`` (``ProbedScan.merge_local``). The
+        result is then a local DataFrame (``isLocal()``) whose ``collect``
+        runs no job; above the bound the lazy ``search`` plan is
+        returned, as it is for the SQ cascade. Where the handle holds the
+        probed lists on the driver (``_resident_blocks``), the scan runs
+        over them there (``ProbedScan.merge_resident``)."""
+        scan = self._probed_scan(queries, k, **kw)
+        if isinstance(scan, DataFrame):
+            return scan
+        blocks = self._resident_blocks(scan)
+        if blocks is not None:
+            return scan.merge_resident(self.spark, blocks)
+        return scan.merge_local()
+
+    def _resident_blocks(self, scan: ProbedScan) -> "list | None":
+        """The probed lists' driver-resident blocks, or None to scan on
+        Spark."""
+        return None
+
+    def _probed_scan(
+        self,
+        queries: DataFrame,
+        k: int,
+        nprobe: "int | None" = None,
+        metric: str | None = None,
+        rerank_exact: bool = False,
+        rerank_k: int | None = None,
+        query_id_col: str = "query_id",
+        qvec_col: str = "qvec",
+        where: "str | Column | None" = None,
+        cascade: str = "auto",
+    ) -> "ProbedScan | DataFrame":
+        """Everything of a search up to its T4 merge: validation, the
+        query batch and the probe — or, on a flat handle, the finished
+        result when the SQ cascade takes the request."""
+        if cascade != "auto":
+            raise ValueError(
+                f"cascade={cascade!r}: the SQ cascade applies to flat IVF "
+                "handles only"
+            )
+        knn.validate_topk(k)
+        nprobe = resolve_nprobe(self.manifest, nprobe, self.surface)
+        metric = D.parse_metric(metric or self.manifest.metric)
+        qids, Q = knn.collect_query_matrix(queries, query_id_col, qvec_col)
+        if len(qids) == 0:
+            raise ValueError("empty query batch")  # server/query_service.cpp:71-75
+        if Q.shape[1] != self.manifest.dimension:
+            raise ValueError(
+                f"query dimension {Q.shape[1]} != index dimension "
+                f"{self.manifest.dimension}"
+            )  # server/query_service.cpp:115-119
+        source, scorer = self._scan_source(Q, metric)
+        return ProbedScan(
+            source=source,
+            scorer=scorer,
+            rerank_source=(
+                self.vectors if rerank_exact and not self.scan_is_exact else None
+            ),
+            lpb=self.lists_per_bucket,
+            where=where,
+            qids=qids,
+            Q=Q,
+            probe=select_nprobe_lists(self.centroids, Q, nprobe, metric),
+            k=k,
+            fetch_k=max(k, rerank_k or 0) if rerank_exact else k,
+            metric=metric,
+            scan_tasks=self.spark.sparkContext.defaultParallelism,
+        )
+
+
 @dataclass
-class IVFIndex:
+class IVFIndex(ProbedSearch):
     """A loaded epoch: driver-side centroids + the partitioned corpus."""
 
     # recall-stamp namespace (resolve_nprobe) — the flat float scan
@@ -1126,97 +1252,16 @@ class IVFIndex:
         )
 
     # -- search (T3) -------------------------------------------------------
+    # ProbedSearch.search, held in this class's own namespace: perfbench's
+    # tracer wraps ``IVFIndex.search`` from the class ``__dict__``
+    search = ProbedSearch.search
+
     def resolved_nprobe(self, nprobe: "int | None") -> int:
         """An unspecified nprobe resolves to the manifest-stamped tuned
         operating point when the epoch was built with ``recall_target=``
         (or tuned later via ``tune_recall``), else the reference's
         default of 8 (server/query_service.cpp:97)."""
         return resolve_nprobe(self.manifest, nprobe, self.surface)
-
-    def search(
-        self,
-        queries: DataFrame,
-        k: int,
-        nprobe: "int | None" = None,
-        metric: str | None = None,
-        rerank_exact: bool = False,
-        rerank_k: int | None = None,
-        query_id_col: str = "query_id",
-        qvec_col: str = "qvec",
-        where: "str | Column | None" = None,
-        cascade: str = "auto",
-    ) -> DataFrame:
-        """Batched IVF search -> {query_id, rank, id, distance}, as a lazy
-        plan: the query batch and the probe run now, the pruned scan and
-        the distributed T4 merge (``knn.topk_per_query``) run at the
-        caller's action. ``search_local`` runs the same search at once,
-        merging on the driver.
-
-        ``rerank_exact``/``rerank_k`` (proto/vdb.proto:22 — declared for any
-        index type): keep the top ``rerank_k`` candidates from the probed
-        scan, re-score them exactly via the join-back kernel, re-rank to k.
-        On IVF-Flat the list scan is already exact, so this is a semantic
-        identity — accepted for declared-flag parity and for callers that
-        treat all indexes uniformly.
-
-        ``where`` — filtered search (beyond the reference, which has no
-        filter field in its proto): a predicate over the index columns
-        (``id``, ``list_id``), as a SQL string or Column, applied INSIDE
-        the pruned scan so Catalyst pushes it to the parquet reader. Top-k
-        then ranks only qualifying vectors — the standard "ANN within a
-        subset" shape (per-language corpora, allowlists, tenant slices).
-        For metadata richer than the id, join the allowlist to ids first
-        and pass ``id IN`` / a membership predicate.
-
-        ``cascade`` — the SQ8-shortlist + pruned exact rerank path
-        (results are exact re-scored distances): ``"sq"`` forces it
-        (raises without the sidecar); ``"off"`` always scans flat
-        floats; ``"auto"`` self-selects from the manifest's declared
-        I/O regime (``build(storage="cold")``): cascade when the epoch
-        is stamped cold AND this query's probed fraction is below
-        ``COLD_CASCADE_MAX_FRACTION`` — the regime where the 4x byte
-        cut measurably wins (1.39x cold at 0.78% probed,
-        scripts/artifacts_cascade_cold_768d.json) — flat otherwise
-        (warm page-cached storage refutes the cascade at every probe
-        shape; r8/r10/r11 interleaved A/Bs). ``CASCADE_AUTO_DEFAULT``
-        remains the regime-less global override."""
-        scan = self._probed_scan(
-            queries, k, nprobe, metric, rerank_exact, rerank_k,
-            query_id_col, qvec_col, where, cascade,
-        )
-        if isinstance(scan, DataFrame):
-            return scan  # the SQ cascade answered
-        return scan.merge(knn.topk_per_query)
-
-    def search_local(self, queries: DataFrame, k: int, **kw) -> DataFrame:
-        """``search`` (same arguments), executed now, with the T4 merge on
-        the driver whenever the candidate relation is bounded by
-        ``knn.LOCAL_MERGE_MAX_ROWS``. The result is then a local DataFrame
-        (``isLocal()``) whose ``collect`` runs no job.
-
-        Within that bound an unfiltered request is answered from the
-        driver-resident list tier: the probed lists missing from it come
-        back in one ``toArrow`` job (none when all are resident), and
-        ``_list_scanner`` plus the numpy merge run over the blocks on the
-        driver, as the reference scans lists held in memory
-        (engine/ivf_flat_index.cpp:205-256). A warm request so runs one
-        Spark job, the query batch's. When the probed lists do not fit
-        ``tier_budget_bytes``, or the request has a ``where=``, the pruned
-        Spark scan runs with its per-task top-k and the candidates merge
-        on the driver (``knn.local_topk``). Above the bound (a large query
-        batch times k), and on the SQ cascade, the lazy ``search`` plan is
-        returned. ``rerank_exact`` re-scores its shortlist on the same
-        path that scanned it."""
-        scan = self._probed_scan(queries, k, **kw)
-        if isinstance(scan, DataFrame):
-            return scan
-        if scan.max_candidates > knn.LOCAL_MERGE_MAX_ROWS:
-            return scan.merge(knn.topk_per_query)
-        if scan.where is None:
-            blocks = self._resident_lists(scan.lists)
-            if blocks is not None:
-                return scan.merge_resident(self.spark, blocks)
-        return scan.merge(knn.local_topk)
 
     def _probed_scan(
         self,
@@ -1231,26 +1276,19 @@ class IVFIndex:
         where: "str | Column | None" = None,
         cascade: str = "auto",
     ) -> "ProbedScan | DataFrame":
-        """Everything of a search up to its T4 merge: validation, the
-        query batch and the probe — or the finished result when the SQ
-        cascade takes the request."""
-        knn.validate_topk(k)
-        nprobe = self.resolved_nprobe(nprobe)
-        metric = D.parse_metric(metric or self.manifest.metric)
-        qids, Q = knn.collect_query_matrix(queries, query_id_col, qvec_col)
-        if len(qids) == 0:
-            raise ValueError("empty query batch")  # server/query_service.cpp:71-75
-        if Q.shape[1] != self.manifest.dimension:
-            raise ValueError(
-                f"query dimension {Q.shape[1]} != index dimension "
-                f"{self.manifest.dimension}"
-            )  # server/query_service.cpp:115-119
+        """``ProbedSearch._probed_scan``, recording the probe's access
+        statistics — or the finished result when the SQ cascade
+        (``ProbedSearch.search``'s ``cascade``) takes the request."""
         if cascade not in ("auto", "off", "sq"):
             raise ValueError(
                 f"cascade must be 'auto', 'off', or 'sq', got {cascade!r}"
             )
-        probe = select_nprobe_lists(self.centroids, Q, nprobe, metric)
-        self._record_access(probe)
+        scan = super()._probed_scan(
+            queries, k, nprobe, metric, rerank_exact, rerank_k,
+            query_id_col, qvec_col, where,
+        )
+        self._record_access(scan.probe)
+        nprobe = self.resolved_nprobe(nprobe)
         if cascade == "sq" or (cascade == "auto" and self._auto_cascade(nprobe)):
             sq_handle = self._cascade_handle()
             if sq_handle is None and cascade == "sq":
@@ -1266,21 +1304,33 @@ class IVFIndex:
                     queries,
                     k,
                     nprobe=nprobe,
-                    metric=metric,
+                    metric=scan.metric,
                     rerank_exact=True,
                     rerank_k=rk,
                     query_id_col=query_id_col,
                     qvec_col=qvec_col,
                     where=where,
                 )
-        fetch_k = max(k, rerank_k or 0) if rerank_exact else k
-        return ProbedScan(
-            self.vectors, self.lists_per_bucket, where, qids, Q, probe, k,
-            fetch_k, metric, rerank_exact,
-            self.spark.sparkContext.defaultParallelism,
-        )
+        return scan
+
+    def _scan_source(self, Q: np.ndarray, metric: str):
+        return self.vectors, None
 
     # -- driver-resident list tier -----------------------------------------
+    def _resident_blocks(self, scan: ProbedScan) -> "list | None":
+        """``search_local``'s driver-side step reads the list tier when it
+        can: within the merge bound, an unfiltered request gets the probed
+        lists missing from the tier in one ``toArrow`` job (none when all
+        are resident) and runs ``_list_scanner`` plus the numpy merge over
+        the blocks on the driver, as the reference scans lists held in
+        memory (engine/ivf_flat_index.cpp:205-256). A warm request so runs
+        one Spark job, the query batch's. When the probed lists do not fit
+        ``tier_budget_bytes``, or the request has a ``where=``, the pruned
+        Spark scan runs as on any handle."""
+        if scan.where is None and scan.max_candidates <= knn.LOCAL_MERGE_MAX_ROWS:
+            return self._resident_lists(scan.lists)
+        return None
+
     def _row_bytes(self) -> int:
         """Estimated bytes of one {id, vector, list_id} row held warm: id(8)
         + float32 vector + list_id(4) + per-row overhead — an upper-ish
@@ -1790,7 +1840,7 @@ def run_search_batch(
     """Batch of heterogeneous requests (engine/ivf_flat_index.h:55 —
     declared, never implemented in the reference): each request carries its
     OWN (k, nprobe, metric, rerank) params. Works over any index exposing
-    ``.spark`` and ``.search`` (IVF-Flat and IVF-PQ).
+    ``.spark``, ``.search`` and ``.search_local`` (every IVF handle).
 
     Requests with identical params fuse into one set-at-a-time search (the
     same coalescing the reference's request queue performs per index+params
@@ -1859,13 +1909,8 @@ def run_search_batch(
                 "query_id long, qvec array<float>",
             )
             t0 = _time.perf_counter()
-            # an eager group runs now: the flat handle merges on the driver
-            run = (
-                index.search_local
-                if eager and isinstance(index, IVFIndex)
-                else index.search
-            )
-            res = run(
+            # an eager group runs now, merging on the driver
+            res = (index.search_local if eager else index.search)(
                 qdf,
                 k=p.k,
                 nprobe=p.nprobe,

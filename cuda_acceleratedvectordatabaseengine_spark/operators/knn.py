@@ -248,23 +248,6 @@ def result_frame(spark, q, rank, i, d) -> DataFrame:
     )
 
 
-def exact_rerank(
-    vectors: DataFrame,
-    shortlist: DataFrame,
-    qids: np.ndarray,
-    Q: np.ndarray,
-    k: int,
-    metric: str,
-    id_col: str = "id",
-    vec_col: str = "vector",
-) -> DataFrame:
-    """T7 exact re-scoring (`rerank_exact`/`rerank_k`, proto/vdb.proto:22 —
-    the flag applies to ANY index type): re-score a {query_id, id} shortlist
-    with exact distances (``exact_rescore``) and re-rank to k."""
-    rescored = exact_rescore(vectors, shortlist, qids, Q, metric, id_col, vec_col)
-    return topk_per_query(rescored, k, dedup=True)
-
-
 def exact_rescore(
     vectors: DataFrame,
     shortlist: DataFrame,
@@ -589,7 +572,7 @@ def mmr_rerank(
     not needed); candidate vectors are joined back by id for the
     candidate-candidate distances. Per-query groups are R rows (R = the
     upstream rerank_k, bounded), so the greedy loop is tiny and the
-    shuffle is O(nq * R) — the same cost class as exact_rerank.
+    shuffle is O(nq * R) — the same cost class as exact_rescore.
     """
     validate_topk(k)
     if not 0.0 <= lam <= 1.0:

@@ -623,4 +623,4 @@ class IVFPQIndex(CodeIndex):
                 dmat += const
             return dmat
 
-        return score
+        return None, score

@@ -37,7 +37,6 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions import distance as D
 from ..sources.epochs import EpochManager
 from .codes import CodeIndex, encode_codes
 from .ivf import IVFIndex
@@ -178,12 +177,8 @@ class IVFSQIndex(CodeIndex):
         return {"vmin": vmin, "vmax": vmax}
 
     def list_scorer(self, Q: np.ndarray, metric: str):
-        """Decode the list's codes to a dense float block (asymmetric: raw
-        query vs decoded corpus) and score with the shared BLAS kernel."""
+        """Decode the codes to a dense float block (asymmetric: raw query
+        vs decoded corpus); the flat kernel scores it — its GEMM ranks and
+        each kept candidate reports its direct-form distance."""
         vmin, vmax = self.vmin, self.vmax
-
-        def score(codes, lid, qidx, ws):
-            V = decode_batch_sq(codes, vmin, vmax)
-            return D.pairwise(metric, V, Q[qidx], ws=ws)
-
-        return score
+        return (lambda codes: decode_batch_sq(codes, vmin, vmax)), None

@@ -15,7 +15,10 @@ parquet views. Contract discipline for cross-engine hash-matching:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -408,9 +411,16 @@ def ann_cosine_topk(spark, sf_dir):
 _INDEX_CACHE: dict[tuple, object] = {}
 
 
-def _build_emb_index(spark, sf_dir, name, metric):
-    import tempfile
+def _scratch_dir(prefix: str) -> str:
+    """A fresh temp directory for a catalog row's index or export, removed
+    at process exit: not sooner, because ``_INDEX_CACHE`` keeps handles
+    over it across rows, and a returned plan reads it lazily."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, True)
+    return d
 
+
+def _build_emb_index(spark, sf_dir, name, metric):
     from ..operators import ivf, kmeans
 
     emb = tables.load(spark, sf_dir, "embeddings")
@@ -421,7 +431,7 @@ def _build_emb_index(spark, sf_dir, name, metric):
         init = kmeans.label_centroids(emb)
         idx = ivf.IVFIndex.build(
             corpus,
-            tempfile.mkdtemp(prefix="cavde_idx_"),
+            _scratch_dir("cavde_idx_"),
             name,
             nlist=init.shape[0],
             metric=metric,
@@ -450,7 +460,6 @@ def _build_half_chain(spark, sf_dir):
     tombstone epoch (activate=False, so the shared tip never moves).
     None of the three results reads another row's artifact; the
     ordering-independence test in tests/test_plans.py covers the trio."""
-    import tempfile
 
     from ..operators import ivf, kmeans
 
@@ -464,7 +473,7 @@ def _build_half_chain(spark, sf_dir):
         init = kmeans.label_centroids(emb)
         base = ivf.IVFIndex.build(
             corpus.filter(F.col("id") % 2 == 0),
-            tempfile.mkdtemp(prefix="cavde_idx_half_"),
+            _scratch_dir("cavde_idx_half_"),
             "q_half_chain",
             nlist=init.shape[0],
             metric=D.L2,
@@ -784,18 +793,16 @@ def ivf_range_search_q(spark, sf_dir):
     """,
 )
 def index_snapshot_roundtrip_q(spark, sf_dir):
-    import tempfile
-
     from ..sources import snapshot
 
     idx, _, qdf = _build_emb_index(spark, sf_dir, "q_ivf_full", D.L2)
     key = (sf_dir, "snapshot_rt")
     imported = _INDEX_CACHE.get(key)
     if imported is None:
-        snap_dir = tempfile.mkdtemp(prefix="cavde_snap_") + "/snap"
+        snap_dir = _scratch_dir("cavde_snap_") + "/snap"
         snapshot.export_epoch(idx, snap_dir)
         imported = snapshot.import_snapshot(
-            spark, snap_dir, tempfile.mkdtemp(prefix="cavde_snap_idx_"), "snap_rt"
+            spark, snap_dir, _scratch_dir("cavde_snap_idx_"), "snap_rt"
         )
         _INDEX_CACHE[key] = imported
     res = imported.search(qdf, k=10, nprobe=imported.manifest.nlist)
@@ -842,8 +849,6 @@ def index_snapshot_roundtrip_q(spark, sf_dir):
     """,
 )
 def index_merge_search_q(spark, sf_dir):
-    import tempfile
-
     from ..service import VectorEngine
 
     emb = tables.load(spark, sf_dir, "embeddings")
@@ -852,7 +857,7 @@ def index_merge_search_q(spark, sf_dir):
     if eng is None:
         from concurrent.futures import ThreadPoolExecutor
 
-        root = tempfile.mkdtemp(prefix="cavde_idx_merge_")
+        root = _scratch_dir("cavde_idx_merge_")
         # one job for both probes instead of first() + count() (r15)
         dim, cnt = emb.agg(
             F.first(F.size("embedding")), F.count("*")
@@ -2438,9 +2443,6 @@ def text_vocabulary_q(spark, sf_dir):
     """,
 )
 def arrow_ipc_roundtrip_q(spark, sf_dir):
-    import shutil
-    import tempfile
-
     from ..sources import arrow_ipc
 
     emb = tables.load(spark, sf_dir, "embeddings").select(
@@ -2479,9 +2481,6 @@ def arrow_ipc_roundtrip_q(spark, sf_dir):
     """,
 )
 def arrow_ipc_slice_q(spark, sf_dir):
-    import shutil
-    import tempfile
-
     from ..sources import arrow_ipc
 
     emb = tables.load(spark, sf_dir, "embeddings").select(
@@ -2587,8 +2586,6 @@ def index_list_stats_q(spark, sf_dir):
     """,
 )
 def index_delta_add_q(spark, sf_dir):
-    import tempfile
-
     from ..operators import ivf, kmeans
 
     emb = tables.load(spark, sf_dir, "embeddings")
@@ -2599,7 +2596,7 @@ def index_delta_add_q(spark, sf_dir):
         init = kmeans.label_centroids(emb)
         base = ivf.IVFIndex.build(
             corpus.filter(F.col("id") % 2 == 0),
-            tempfile.mkdtemp(prefix="cavde_idx_delta_"),
+            _scratch_dir("cavde_idx_delta_"),
             "q_delta",
             nlist=init.shape[0],
             metric=D.L2,
@@ -6015,15 +6012,13 @@ def pipeline_web_ingest_q(spark, sf_dir):
     oracle=_web_ingest_oracle(),
 )
 def pipeline_warc_ingest_q(spark, sf_dir):
-    import tempfile
-
     from ..operators import web
     from ..sources import warc as WARC
 
     key = (sf_dir, "warc_landing")
     landing = _INDEX_CACHE.get(key)
     if landing is None:
-        root = tempfile.mkdtemp(prefix="cavde_warc_")
+        root = _scratch_dir("cavde_warc_")
         manifest = tables.load(spark, sf_dir, "documents").select(
             "doc_id",
             F.expr(_WEB_URL_FIXTURE).alias("url"),
@@ -6075,14 +6070,12 @@ def pipeline_warc_ingest_q(spark, sf_dir):
     """,
 )
 def pipeline_training_shards_q(spark, sf_dir):
-    import tempfile
-
     from ..operators import shards as SH
 
     key = (sf_dir, "training_shards")
     out = _INDEX_CACHE.get(key)
     if out is None:
-        out = tempfile.mkdtemp(prefix="cavde_shards_") + "/export"
+        out = _scratch_dir("cavde_shards_") + "/export"
         docs = tables.load(spark, sf_dir, "documents").select("doc_id", "text")
         SH.write_training_shards(docs, out, n_shards=8, salt="r7shards")
         _INDEX_CACHE[key] = out
@@ -6264,8 +6257,6 @@ def text_quality_gate_docs_q(spark, sf_dir):
     """,
 )
 def pq_residual_invariants_q(spark, sf_dir):
-    import tempfile
-
     import numpy as np
 
     from ..operators import ivf, kmeans
@@ -6279,7 +6270,7 @@ def pq_residual_invariants_q(spark, sf_dir):
     cached = _INDEX_CACHE.get(key)
     if cached is None:
         init = kmeans.label_centroids(emb)
-        base_dir = tempfile.mkdtemp(prefix="cavde_idx_pqres_")
+        base_dir = _scratch_dir("cavde_idx_pqres_")
         base = ivf.IVFIndex.build(
             corpus.filter(F.col("id") % 2 == 0), base_dir, "q_pq_res",
             nlist=init.shape[0], metric=D.L2, init=init, train=False,
@@ -6761,8 +6752,6 @@ _E2E_VEC_CTES = (
     """,
 )
 def pipeline_docs_to_ann_q(spark, sf_dir):
-    import tempfile
-
     from ..operators import ivf, textops
 
     def chunk_keyed(docs):
@@ -6801,7 +6790,7 @@ def pipeline_docs_to_ann_q(spark, sf_dir):
         try:
             idx = ivf.IVFIndex.build(
                 vecs,
-                tempfile.mkdtemp(prefix="cavde_e2e_"),
+                _scratch_dir("cavde_e2e_"),
                 "docs_to_ann",
                 nlist=8,
                 metric=D.L2,

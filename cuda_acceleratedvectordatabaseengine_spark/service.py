@@ -716,18 +716,19 @@ class VectorEngine:
         percentiles measure submit-to-complete like the reference
         (query_service.cpp:142-151), not just plan construction — and the
         caller gets a computed result whose re-use costs no second search.
-        A flat handle answers through ``IVFIndex.search_local``: when the
-        candidate bound fits ``knn.LOCAL_MERGE_MAX_ROWS`` the merge runs on
-        the driver and the result is a local DataFrame (``isLocal()``),
-        returned as is — the caller's ``collect`` runs no job. An
-        unfiltered request within that bound scans the handle's
-        driver-resident list tier: once its probed lists are held there
+        Every handle, flat or quantized, answers through ``search_local``:
+        when the candidate bound fits ``knn.LOCAL_MERGE_MAX_ROWS`` the
+        merge runs on the driver and the result is a local DataFrame
+        (``isLocal()``), returned as is — the caller's ``collect`` runs no
+        job. A flat handle's unfiltered request within that bound scans
+        its driver-resident list tier: once its probed lists are held there
         (the first request to probe a list reads it in), the request runs
-        one Spark job, the query batch's. Any other result (PQ/SQ/BQ
-        handles, the SQ cascade, MMR, a merge above the bound) is
-        materialized with an eager ``localCheckpoint``.
+        one Spark job, the query batch's. Any other result (the SQ
+        cascade, MMR, a merge above the bound) is materialized with an
+        eager ``localCheckpoint``.
 
-        ``cascade`` (flat handles only, r8): "sq" routes through the
+        ``cascade`` (r8; a PQ/SQ/BQ handle raises ``ValueError`` on any
+        value but "auto"): "sq" routes a flat handle through the
         SQ8-shortlist + exact-rerank cascade (requires the sidecar —
         ``encode_sq`` refreshes loaded handles so it engages without a
         reload); "auto" (default) follows ivf.CASCADE_AUTO_DEFAULT,
@@ -735,8 +736,6 @@ class VectorEngine:
         local storage at every probe shape (see the constant's rationale
         and when a remote-storage deployment should flip it)."""
         idx = self._loaded(index)
-        flat = isinstance(idx, IVFIndex)
-        casc = {"cascade": cascade} if flat else {}
         t0 = time.perf_counter()
         if mmr_lambda is not None:
             from .operators import knn as _knn
@@ -762,7 +761,7 @@ class VectorEngine:
                 rerank_exact=rerank_exact,
                 rerank_k=rerank_k,
                 where=where,
-                **casc,
+                cascade=cascade,
             ).select("query_id", "id", "distance")
             result = _knn.mmr_rerank(
                 idx.vectors,
@@ -772,7 +771,7 @@ class VectorEngine:
                 metric=metric or idx.manifest.metric,
             )
         else:
-            result = (idx.search_local if flat else idx.search)(
+            result = idx.search_local(
                 queries,
                 k=topk,
                 nprobe=nprobe,
@@ -780,7 +779,7 @@ class VectorEngine:
                 rerank_exact=rerank_exact,
                 rerank_k=rerank_k,
                 where=where,
-                **casc,
+                cascade=cascade,
             )
         if not result.isLocal():
             result = result.localCheckpoint(eager=True)

@@ -700,3 +700,47 @@ def test_plan_token_canaries_against_live_renderer(spark, tmp_path):
     df.collect()
     final = plan_of(df)
     assert "isFinalPlan=true" in final and "codegen id" in final
+
+
+CATALOG_TEMP_DIRS = """
+import json, os, sys, tempfile
+sys.path.insert(0, {root!r})
+from cuda_acceleratedvectordatabaseengine_spark.plans import queries as Q
+from cuda_acceleratedvectordatabaseengine_spark.session import get_spark
+
+spark = get_spark(app_name="catalog-temp-dirs", cpus=2, shuffle_partitions=2)
+for name in ("ivf_search_fullprobe", "index_delete_tombstones"):
+    Q.REGISTRY[name].spark(spark, {sf_dir!r}).collect()
+print(json.dumps(sorted(
+    d for d in os.listdir(tempfile.gettempdir()) if d.startswith("cavde_")
+)))
+"""
+
+
+def test_catalog_index_rows_leave_no_temp_dirs(sf_dir, tmp_path):
+    """Two index catalog rows, run in a process of their own, build their
+    indexes in ``cavde_*`` temp directories that are gone once the process
+    exits: the shared index cache needs them until then, and no longer."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(Q.__file__)))
+    temp_root = tmp_path / "tmp"
+    temp_root.mkdir()
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    # a second driver next to the test session: keep its heap small
+    env.update(
+        TMPDIR=str(temp_root), SPARK_GRAFT_DRIVER_MEM="512m",
+        SPARK_GRAFT_PRETOUCH="0",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         CATALOG_TEMP_DIRS.format(root=os.path.dirname(pkg), sf_dir=sf_dir)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    made = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert any(d.startswith("cavde_idx_") for d in made), made
+    assert not [d for d in os.listdir(temp_root) if d.startswith("cavde_")]

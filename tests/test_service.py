@@ -925,6 +925,79 @@ def test_search_job_budget_on_delta_chain(
         assert local == distributed, kw
 
 
+def test_code_handle_job_budget_on_delta_chain(
+    spark, engine, tmp_root, sf_dir, count_jobs, monkeypatch
+):
+    """PQ, SQ and BQ handles search through the flat handle's frame. On a
+    base + delta chain an online request runs at most 2 Spark jobs, plain
+    or filtered: the query batch and the one-wave code scan, whose
+    per-task top-k merges on the driver. A reranked one runs at most 4:
+    its shortlist's broadcast and the re-scoring scan of the probed raw
+    vectors are two more. A tombstone epoch on the tip adds its
+    anti-join's broadcast to every folded read: one job to the code scan,
+    one more to the re-scoring scan. Rows equal the distributed merge's
+    (forced with LOCAL_MERGE_MAX_ROWS = 0), and a cascade other than
+    "auto" is refused on a code handle."""
+    from cuda_acceleratedvectordatabaseengine_spark.operators.bq import IVFBQIndex
+    from cuda_acceleratedvectordatabaseengine_spark.operators.ivf import IVFIndex
+    from cuda_acceleratedvectordatabaseengine_spark.operators.pq import IVFPQIndex
+    from cuda_acceleratedvectordatabaseengine_spark.operators.sq import IVFSQIndex
+
+    emb = tables.load(spark, sf_dir, "embeddings")
+    emb.filter(F.col("vec_id") < 300).select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
+    ).write.parquet(f"{tmp_root}/codes_src")
+    emb.filter((F.col("vec_id") >= 300) & (F.col("vec_id") < 360)).select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
+    ).write.parquet(f"{tmp_root}/codes_delta")
+    engine.create_index("codes", 64, metric="l2", nlist=8)
+    ep = engine.build_epoch("codes", f"{tmp_root}/codes_src", seed=5, max_iter=2)
+    engine.activate_epoch("codes", ep)
+    base = IVFIndex.load(spark, engine.data_path, "codes")
+    IVFPQIndex.build_from_ivf(base, m=4)
+    IVFSQIndex.build_from_ivf(base)
+    IVFBQIndex.build_from_ivf(base)
+    # the delta epoch gets each sidecar's O(delta) encode
+    engine.add_vectors("codes", f"{tmp_root}/codes_delta", activate=True)
+
+    picks = emb.filter(F.col("vec_id") < 360).orderBy("vec_id").limit(16).collect()
+    qdf = spark.createDataFrame(
+        [(i, list(r["embedding"])) for i, r in enumerate(picks)],
+        "query_id long, qvec array<float>",
+    )
+
+    def rows(**kw):
+        res = engine.search("codes", qdf, topk=10, nprobe=4, **kw)
+        return res, sorted(tuple(r) for r in res.collect())
+
+    def check(deleted, tombstone_jobs):
+        for variant in ("pq", "sq", "bq"):
+            engine.load_index("codes", variant=variant)
+            rows()  # a fresh handle's first search lists the chain's files
+            for kw in (
+                {}, {"where": "id % 3 = 0"}, {"rerank_exact": True, "rerank_k": 20}
+            ):
+                (res, local), n = count_jobs(lambda: rows(**kw))
+                assert len(local) == 16 * 10
+                assert not {r[2] for r in local} & set(deleted)
+                assert res.isLocal()
+                budget = (4 + 2 * tombstone_jobs if "rerank_exact" in kw
+                          else 2 + tombstone_jobs)
+                assert n["jobs"] <= budget, (variant, kw, n)
+                with monkeypatch.context() as m:
+                    m.setattr(knn, "LOCAL_MERGE_MAX_ROWS", 0)
+                    dist, distributed = rows(**kw)
+                assert not dist.isLocal()
+                assert local == distributed, (variant, kw)
+            with pytest.raises(ValueError, match="flat IVF handles only"):
+                rows(cascade="sq")
+
+    check([], 0)
+    deleted = [3, 11, 305, 310]
+    engine.delete_vectors("codes", deleted, activate=True)
+    check(deleted, 1)
+
+
 def test_first_search_after_activation_runs_no_schema_job(
     spark, engine, tmp_root, sf_dir, count_jobs
 ):

@@ -200,3 +200,30 @@ def test_sq_chain_respects_tombstones(spark, emb_corpus, tmp_path):
     )
     got = served.search(qdf, k=3, nprobe=6, rerank_exact=True, rerank_k=10).collect()
     assert got and all(r["id"] not in set(victims) for r in got)
+
+
+def test_rows_do_not_depend_on_arrow_batch_size(spark, sf_dir, sq_index):
+    """SQ decodes its codes and scores them with the flat kernel, whose
+    GEMM only ranks: each kept candidate reports its direct-form distance
+    over its decoded row. The rows are then the same whether a list
+    reaches the scan in batches of 7 rows or in one batch. (64 queries
+    at full probe: each list is scored against more queries than
+    ``D.pairwise`` scores in direct form.)"""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    queries = tables.load(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id") < 64
+    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
+
+    def rows():
+        res = sq_index.search(queries, k=10, nprobe=10)
+        return sorted(tuple(r) for r in res.collect())
+
+    whole = rows()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        small = rows()
+    finally:
+        spark.conf.set(key, old)
+    assert len(whole) == 64 * 10
+    assert small == whole
